@@ -1,326 +1,175 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.functions.call_function
 
 import graft.functions.{BloomAgg, BloomContains, HeavyHitters, CosineSim, HashedProjection, HyperplaneBands, Int8Codes, Int8Cosine, JaccardSim, KgramMd5Hashes, MatVecF, MinhashMd5Sig, MinhashSig, NearestCentroid, PqAdcSim, PqAsymSim, PqCodes, PqLut, PqResidCodes, PqResidLut, PqResidSim, ShingleHashes, ShingleMd5Hashes, ShingleXor64, SimHash64, SimHashMd5, TopKByScore, WsTokens, ZValue2}
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Engine extension point, installed via spark.sql.extensions (GraftSession
-  * sets it). Registers native expressions as SQL functions so both
+  * sets it). Registers every native expression of
+  * [[GraftExtensions.kernels]] as a SQL function, so both
   * `spark.sql("SELECT cosine_sim(a,b)")` and the typed Column helpers work.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-        (children: Seq[Expression]) => CosineSim(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("top_k_by_score"),
-        new ExpressionInfo(classOf[TopKByScore].getName, "top_k_by_score"),
-        (children: Seq[Expression]) => TopKByScore(children(0), children(1), children(2)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-        (children: Seq[Expression]) => MinhashSig(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("ws_tokens"),
-        new ExpressionInfo(classOf[WsTokens].getName, "ws_tokens"),
-        (children: Seq[Expression]) => WsTokens(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("simhash64"),
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-        (children: Seq[Expression]) => SimHash64(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("hashed_projection"),
-        new ExpressionInfo(classOf[HashedProjection].getName, "hashed_projection"),
-        // Guard arity + dims shape HERE: the builder runs at resolution
-        // time, before HashedProjection.checkInputDataTypes would, so a
-        // bad call must raise a readable analysis error rather than
-        // IndexOutOfBounds/ClassCastException (r16 ADVICE).
-        (children: Seq[Expression]) => {
-          if (children.length != 2)
-            throw new org.apache.spark.sql.AnalysisException(
-              "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-              Map(
-                "functionName" -> "`hashed_projection`",
-                "expectedNum" -> "2",
-                "actualNum" -> children.length.toString,
-                "docroot" -> "https://spark.apache.org/docs/latest"),
-              Option.empty[Throwable])
-          val dimsExpr = children(1)
-          // two distinct failures, two readable errors (r17 ADVICE: a
-          // foldable-but-wrong-type dims used to raise
-          // NON_FOLDABLE_ARGUMENT, which misdescribes it): first
-          // non-foldable, then — for a foldable dims — wrong type or a
-          // NULL int literal (which folds to null and would NPE-unbox
-          // below) as a datatype mismatch
-          if (!dimsExpr.foldable)
-            throw new org.apache.spark.sql.AnalysisException(
-              "NON_FOLDABLE_ARGUMENT",
-              Map(
-                "funcName" -> "`hashed_projection`",
-                "paramName" -> "`dims`",
-                "paramType" -> "\"INT\""),
-              Option.empty[Throwable])
-          if (dimsExpr.dataType != org.apache.spark.sql.types.IntegerType ||
-              dimsExpr.eval() == null)
-            throw new org.apache.spark.sql.AnalysisException(
-              "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
-              Map(
-                "sqlExpr" -> "\"hashed_projection\"",
-                "paramIndex" -> "second",
-                "requiredType" -> "\"INT\" (non-NULL literal)",
-                "inputSql" -> s"\"${dimsExpr.sql}\"",
-                "inputType" -> s"\"${dimsExpr.dataType.sql}\""),
-              Option.empty[Throwable])
-          HashedProjection(children(0), dimsExpr.eval().asInstanceOf[Int])
-        },
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("shingle_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-        (children: Seq[Expression]) => ShingleHashes(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("jaccard_sim"),
-        new ExpressionInfo(classOf[JaccardSim].getName, "jaccard_sim"),
-        (children: Seq[Expression]) => JaccardSim(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("shingle_xor64"),
-        new ExpressionInfo(classOf[ShingleXor64].getName, "shingle_xor64"),
-        (children: Seq[Expression]) => ShingleXor64(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("minhash_md5_sig"),
-        new ExpressionInfo(classOf[MinhashMd5Sig].getName, "minhash_md5_sig"),
-        (children: Seq[Expression]) => MinhashMd5Sig(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("shingle_md5_hashes"),
-        new ExpressionInfo(classOf[ShingleMd5Hashes].getName, "shingle_md5_hashes"),
-        (children: Seq[Expression]) => ShingleMd5Hashes(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("kgram_md5_hashes"),
-        new ExpressionInfo(classOf[KgramMd5Hashes].getName, "kgram_md5_hashes"),
-        (children: Seq[Expression]) => KgramMd5Hashes(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("simhash_md5"),
-        new ExpressionInfo(classOf[SimHashMd5].getName, "simhash_md5"),
-        (children: Seq[Expression]) => SimHashMd5(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("bloom_agg"),
-        new ExpressionInfo(classOf[BloomAgg].getName, "bloom_agg"),
-        (children: Seq[Expression]) => BloomAgg(children(0), children(1), children(2)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("bloom_contains"),
-        new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-        (children: Seq[Expression]) => BloomContains(children(0), children(1), children(2)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("heavy_hitters"),
-        new ExpressionInfo(classOf[HeavyHitters].getName, "heavy_hitters"),
-        (children: Seq[Expression]) => HeavyHitters(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("int8_codes"),
-        new ExpressionInfo(classOf[Int8Codes].getName, "int8_codes"),
-        (children: Seq[Expression]) => Int8Codes(children(0)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("int8_cosine"),
-        new ExpressionInfo(classOf[Int8Cosine].getName, "int8_cosine"),
-        (children: Seq[Expression]) => Int8Cosine(children(0), children(1)),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("nearest_centroid"),
-        new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
-        (children: Seq[Expression]) =>
-          NearestCentroid(
-            children(0),
-            children(1).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(2).eval().asInstanceOf[Int],
-            children(3).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_codes"),
-        new ExpressionInfo(classOf[PqCodes].getName, "pq_codes"),
-        (children: Seq[Expression]) =>
-          PqCodes(
-            children(0),
-            children(1).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(2).eval().asInstanceOf[Int],
-            children(3).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_lut"),
-        new ExpressionInfo(classOf[PqLut].getName, "pq_lut"),
-        (children: Seq[Expression]) =>
-          PqLut(
-            children(0),
-            children(1).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(2).eval().asInstanceOf[Int],
-            children(3).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_adc_sim"),
-        new ExpressionInfo(classOf[PqAdcSim].getName, "pq_adc_sim"),
-        (children: Seq[Expression]) =>
-          PqAdcSim(
-            children(0),
-            children(1),
-            children(2).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(3).eval().asInstanceOf[Int],
-            children(4).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_resid_codes"),
-        new ExpressionInfo(classOf[PqResidCodes].getName, "pq_resid_codes"),
-        (children: Seq[Expression]) =>
-          PqResidCodes(
-            children(0),
-            children(1),
-            children(2).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(3).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(4).eval().asInstanceOf[Int],
-            children(5).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_resid_lut"),
-        new ExpressionInfo(classOf[PqResidLut].getName, "pq_resid_lut"),
-        (children: Seq[Expression]) =>
-          PqResidLut(
-            children(0),
-            children(1).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(2).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(3).eval().asInstanceOf[Int],
-            children(4).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_resid_sim"),
-        new ExpressionInfo(classOf[PqResidSim].getName, "pq_resid_sim"),
-        (children: Seq[Expression]) =>
-          PqResidSim(
-            children(0),
-            children(1),
-            children(2),
-            children(3).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(4).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(5).eval().asInstanceOf[Int],
-            children(6).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("pq_asym_sim"),
-        new ExpressionInfo(classOf[PqAsymSim].getName, "pq_asym_sim"),
-        (children: Seq[Expression]) =>
-          PqAsymSim(
-            children(0),
-            children(1),
-            children(2).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(3).eval().asInstanceOf[Int],
-            children(4).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("mat_vec"),
-        new ExpressionInfo(classOf[MatVecF].getName, "mat_vec"),
-        (children: Seq[Expression]) =>
-          MatVecF(
-            children(0),
-            children(1).eval().asInstanceOf[ArrayData].toFloatArray(),
-            children(2).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("z_value2"),
-        new ExpressionInfo(classOf[ZValue2].getName, "z_value2"),
-        (children: Seq[Expression]) =>
-          ZValue2(
-            children(0),
-            children(1),
-            children(2).eval().asInstanceOf[ArrayData].toLongArray(),
-            children(3).eval().asInstanceOf[Int]),
-      )
-    )
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("hyperplane_bands"),
-        new ExpressionInfo(classOf[HyperplaneBands].getName, "hyperplane_bands"),
-        (children: Seq[Expression]) =>
-          HyperplaneBands(
-            children(0),
-            children(1).eval().asInstanceOf[Int],
-            children(2).eval().asInstanceOf[Int],
-            children(3).eval().asInstanceOf[Int]),
-      )
-    )
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.kernels.foreach { k =>
+      ext.injectFunction(
+        (FunctionIdentifier(k.name), new ExpressionInfo(k.cls.getName, k.name), k.guarded _))
+    }
+}
+
+object GraftExtensions {
+
+  /** One argument of a kernel's SQL call. A column argument passes
+    * through as an expression, whose own checkInputDataTypes judges it;
+    * a literal argument (`literal` = its type) is evaluated at resolution
+    * time into a constructor parameter.
+    */
+  private[graft] final case class Param(name: String, literal: Option[DataType] = None)
+
+  /** The children of one guarded call; the typed accessors evaluate a
+    * literal argument (the guard has checked it folds to a non-NULL value
+    * of that type).
+    */
+  private[graft] final class Args(children: Seq[Expression]) {
+    def apply(i: Int): Expression = children(i)
+    def int(i: Int): Int = children(i).eval().asInstanceOf[Int]
+    def floats(i: Int): Array[Float] = children(i).eval().asInstanceOf[ArrayData].toFloatArray()
+    def longs(i: Int): Array[Long] = children(i).eval().asInstanceOf[ArrayData].toLongArray()
   }
+
+  /** One SQL function: its name, expression class, parameters (the
+    * arity is their count) and the builder over guarded arguments.
+    */
+  private[graft] final case class Kernel(
+      name: String,
+      cls: Class[_ <: Expression],
+      params: Seq[Param],
+      build: Args => Expression) {
+    def arity: Int = params.length
+
+    /** The function builder Spark calls. It runs at resolution time,
+      * before any checkInputDataTypes could, so a bad call raises a
+      * readable analysis error here instead of IndexOutOfBounds,
+      * ClassCast or an unevaluable-expression failure: wrong arity, then
+      * per literal parameter a non-foldable argument, then a foldable one
+      * of the wrong type or a NULL literal (which would NPE-unbox).
+      */
+    def guarded(children: Seq[Expression]): Expression = {
+      if (children.length != arity)
+        throw error("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          "functionName" -> s"`$name`",
+          "expectedNum" -> arity.toString,
+          "actualNum" -> children.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest")
+      params.zip(children).zipWithIndex.foreach {
+        case ((Param(p, Some(t)), e), i) =>
+          if (!e.foldable)
+            throw error("NON_FOLDABLE_ARGUMENT",
+              "funcName" -> s"`$name`",
+              "paramName" -> s"`$p`",
+              "paramType" -> s"\"${t.sql}\"")
+          if (!sameType(e.dataType, t) || e.eval() == null)
+            throw error("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+              "sqlExpr" -> s"\"$name\"",
+              "paramIndex" -> Ordinals(i),
+              "requiredType" -> s"\"${t.sql}\" (non-NULL literal)",
+              "inputSql" -> s"\"${e.sql}\"",
+              "inputType" -> s"\"${e.dataType.sql}\"")
+        case _ =>
+      }
+      build(new Args(children))
+    }
+  }
+
+  private val Ordinals =
+    IndexedSeq("first", "second", "third", "fourth", "fifth", "sixth", "seventh")
+
+  /** Literal arrays match on element type; their nullability is free. */
+  private def sameType(got: DataType, want: DataType): Boolean = (got, want) match {
+    case (ArrayType(g, _), ArrayType(w, _)) => g == w
+    case _ => got == want
+  }
+
+  private def error(cls: String, params: (String, String)*): AnalysisException =
+    new AnalysisException(cls, params.toMap, Option.empty[Throwable])
+
+  private def col(name: String) = Param(name)
+  private def int(name: String) = Param(name, Some(IntegerType))
+  private def floats(name: String) = Param(name, Some(ArrayType(FloatType)))
+  private def longs(name: String) = Param(name, Some(ArrayType(LongType)))
+
+  /** Every native SQL function of the engine. */
+  private[graft] val kernels: Seq[Kernel] = Seq(
+    Kernel("cosine_sim", classOf[CosineSim], Seq(col("left"), col("right")),
+      a => CosineSim(a(0), a(1))),
+    Kernel("top_k_by_score", classOf[TopKByScore], Seq(col("id"), col("score"), col("k")),
+      a => TopKByScore(a(0), a(1), a(2))),
+    Kernel("minhash_sig", classOf[MinhashSig], Seq(col("tokens"), col("k")),
+      a => MinhashSig(a(0), a(1))),
+    Kernel("ws_tokens", classOf[WsTokens], Seq(col("text")), a => WsTokens(a(0))),
+    Kernel("simhash64", classOf[SimHash64], Seq(col("tokens")), a => SimHash64(a(0))),
+    Kernel("hashed_projection", classOf[HashedProjection], Seq(col("tokens"), int("dims")),
+      a => HashedProjection(a(0), a.int(1))),
+    Kernel("shingle_hashes", classOf[ShingleHashes], Seq(col("tokens")), a => ShingleHashes(a(0))),
+    Kernel("jaccard_sim", classOf[JaccardSim], Seq(col("left"), col("right")),
+      a => JaccardSim(a(0), a(1))),
+    Kernel("shingle_xor64", classOf[ShingleXor64], Seq(col("tokens")), a => ShingleXor64(a(0))),
+    Kernel("minhash_md5_sig", classOf[MinhashMd5Sig], Seq(col("tokens"), col("k")),
+      a => MinhashMd5Sig(a(0), a(1))),
+    Kernel("shingle_md5_hashes", classOf[ShingleMd5Hashes], Seq(col("tokens")),
+      a => ShingleMd5Hashes(a(0))),
+    Kernel("kgram_md5_hashes", classOf[KgramMd5Hashes], Seq(col("tokens"), col("k")),
+      a => KgramMd5Hashes(a(0), a(1))),
+    Kernel("simhash_md5", classOf[SimHashMd5], Seq(col("tokens")), a => SimHashMd5(a(0))),
+    Kernel("bloom_agg", classOf[BloomAgg], Seq(col("key"), col("numBits"), col("numHashes")),
+      a => BloomAgg(a(0), a(1), a(2))),
+    Kernel("bloom_contains", classOf[BloomContains],
+      Seq(col("bloom"), col("key"), col("numHashes")),
+      a => BloomContains(a(0), a(1), a(2))),
+    Kernel("heavy_hitters", classOf[HeavyHitters], Seq(col("item"), col("k")),
+      a => HeavyHitters(a(0), a(1))),
+    Kernel("int8_codes", classOf[Int8Codes], Seq(col("vec")), a => Int8Codes(a(0))),
+    Kernel("int8_cosine", classOf[Int8Cosine], Seq(col("left"), col("right")),
+      a => Int8Cosine(a(0), a(1))),
+    Kernel("nearest_centroid", classOf[NearestCentroid],
+      Seq(col("vec"), floats("centroids"), int("k"), int("dims")),
+      a => NearestCentroid(a(0), a.floats(1), a.int(2), a.int(3))),
+    Kernel("pq_codes", classOf[PqCodes],
+      Seq(col("vec"), floats("codebook"), int("m"), int("ksub")),
+      a => PqCodes(a(0), a.floats(1), a.int(2), a.int(3))),
+    Kernel("pq_lut", classOf[PqLut],
+      Seq(col("qvec"), floats("codebook"), int("m"), int("ksub")),
+      a => PqLut(a(0), a.floats(1), a.int(2), a.int(3))),
+    Kernel("pq_adc_sim", classOf[PqAdcSim],
+      Seq(col("codes"), col("lut"), floats("codebook"), int("m"), int("ksub")),
+      a => PqAdcSim(a(0), a(1), a.floats(2), a.int(3), a.int(4))),
+    Kernel("pq_resid_codes", classOf[PqResidCodes],
+      Seq(col("vec"), col("cluster"), floats("centroids"), floats("codebook"), int("m"), int("ksub")),
+      a => PqResidCodes(a(0), a(1), a.floats(2), a.floats(3), a.int(4), a.int(5))),
+    Kernel("pq_resid_lut", classOf[PqResidLut],
+      Seq(col("qvec"), floats("centroids"), floats("codebook"), int("m"), int("ksub")),
+      a => PqResidLut(a(0), a.floats(1), a.floats(2), a.int(3), a.int(4))),
+    Kernel("pq_resid_sim", classOf[PqResidSim],
+      Seq(col("codes"), col("lut"), col("cluster"), floats("centroids"), floats("codebook"),
+        int("m"), int("ksub")),
+      a => PqResidSim(a(0), a(1), a(2), a.floats(3), a.floats(4), a.int(5), a.int(6))),
+    Kernel("pq_asym_sim", classOf[PqAsymSim],
+      Seq(col("codes"), col("qvec"), floats("codebook"), int("m"), int("ksub")),
+      a => PqAsymSim(a(0), a(1), a.floats(2), a.int(3), a.int(4))),
+    Kernel("mat_vec", classOf[MatVecF], Seq(col("vec"), floats("mat"), int("d")),
+      a => MatVecF(a(0), a.floats(1), a.int(2))),
+    Kernel("z_value2", classOf[ZValue2], Seq(col("k0"), col("k1"), longs("bounds"), int("stride")),
+      a => ZValue2(a(0), a(1), a.longs(2), a.int(3))),
+    Kernel("hyperplane_bands", classOf[HyperplaneBands],
+      Seq(col("vec"), int("planes"), int("bands"), int("dims")),
+      a => HyperplaneBands(a(0), a.int(1), a.int(2), a.int(3))),
+  )
 }
 
 /** Typed Column-API surface for the engine's native functions. */

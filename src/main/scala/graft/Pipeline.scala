@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.sources.{ParquetSink, SinkConfig}
 
@@ -20,9 +20,23 @@ import graft.sources.{ParquetSink, SinkConfig}
   */
 object ScrapePipeline {
 
+  /** "Rp1.234.567" -> 1234567 (scrap_tokopedia.py:256). An unparseable
+    * string reads NULL, as the reference's per-field parse does
+    * ([[operators.HtmlTree.extractProduct]]), so one bad value cannot
+    * fail a batch under ANSI casts.
+    */
+  private[graft] def priceOf(s: Column): Column =
+    regexp_replace(regexp_replace(s, "Rp", ""), "\\.", "").try_cast(LongType)
+
+  /** "25%" -> 0.25 (scrap_tokopedia.py:262); NULL when unparseable. */
+  private[graft] def discountOf(s: Column): Column =
+    regexp_replace(s, "%", "").try_cast(DoubleType) / 100
+
   /** Transform: the reference's field parses as codegen'd expressions over
     * a raw scrape frame with columns (id, name, detail, price_str,
-    * original_price_str, discount_str).
+    * original_price_str, discount_str). A price that does not parse is
+    * NULL and [[validate]] quarantines its row; an optional field that
+    * does not parse loads as NULL.
     */
   def transform(raw: DataFrame, platform: String, createdate: String): DataFrame =
     raw
@@ -30,14 +44,9 @@ object ScrapePipeline {
         col("id"),
         col("name"),
         col("detail"),
-        // "Rp1.234.567" -> 1234567 (scrap_tokopedia.py:256)
-        regexp_replace(regexp_replace(col("price_str"), "Rp", ""), "\\.", "")
-          .cast(LongType).as("price"),
-        regexp_replace(regexp_replace(col("original_price_str"), "Rp", ""), "\\.", "")
-          .cast(LongType).as("originalprice"),
-        // "25%" -> 0.25 (scrap_tokopedia.py:262)
-        (regexp_replace(col("discount_str"), "%", "").cast("double") / 100)
-          .as("discountpercentage"),
+        priceOf(col("price_str")).as("price"),
+        priceOf(col("original_price_str")).as("originalprice"),
+        discountOf(col("discount_str")).as("discountpercentage"),
         lit(platform).as("platform"),
         to_date(lit(createdate)).as("createdate"),
       )

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Job-group-scoped shuffle-write attribution — the ONE rendering of
   * the measurement discipline shared by ByteBudgetSpec (the suite
-  * gate) and MeasureBytes (the calibration tool), so the printed
+  * gate) and `graft.Dev bytes` (the calibration tool), so the printed
   * calibration rows and the asserted budgets can never drift apart on
   * measurement mechanics.
   *

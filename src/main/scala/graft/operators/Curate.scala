@@ -231,6 +231,36 @@ object Curate {
       lang, minTokens)
   }
 
+  /** Fuzzy (minhash) contamination gate over the gated population:
+    * [[Dedup.nearDupAgainstT]] with the gated corpus as arrivals and the
+    * benchmark slice as the capped reference — the q88 law over the
+    * stage table's token arrays (no extra text scan). Returns the fuzzily
+    * contaminated doc_ids.
+    */
+  def contamFuzzyGate(gated: DataFrame, bench: DataFrame): DataFrame =
+    Dedup.nearDupAgainstT(
+        gated.select(col("doc_id"), col("toks")),
+        bench.select(col("doc_id"), col("toks")))
+      .filter(col("is_match"))
+      .select("doc_id")
+
+  /** Semantic (embedding) contamination gate over the gated
+    * population: the q99 law — both sides embedded via
+    * the q80 md5 bag-of-words projection over the stage table's token
+    * arrays (no extra text scan), decided by
+    * [[TrainPrep.semContamDecisionsOn]] (the ONE rendering). Catches a
+    * fully REORDERED benchmark paraphrase, which shares neither an
+    * 8-gram (q38's gate) nor enough shingles (q88's): the bag-of-words
+    * embedding is token-order-independent, so the reorder lands at
+    * dot ≈ 1. Returns the semantically contaminated doc_ids.
+    */
+  def contamSemGate(gated: DataFrame, bench: DataFrame): DataFrame =
+    TrainPrep.semContamDecisionsOn(
+        Dedup.textEmbedMd5From(gated.select(col("doc_id"), col("toks"))),
+        Dedup.textEmbedMd5From(bench.select(col("doc_id"), col("toks"))))
+      .filter(col("contaminated_sem"))
+      .select("doc_id")
+
   /** Curation with a benchmark-decontamination gate: the corpus slice
     * (doc_id % 20 != 0, the convention shared with q38/q44) is curated
     * as in [[curate]], with contaminated docs — sharing an 8-gram with
@@ -240,36 +270,6 @@ object Curate {
     * reuses the stage table's token arrays (still ONE corpus text scan)
     * and q44's bloom-prefilter + exact-confirm shape.
     */
-  /** Fuzzy (minhash) contamination gate over the already exact-
-    * decontaminated population: [[Dedup.nearDupAgainstT]] with the
-    * gated corpus as arrivals and the benchmark slice as the capped
-    * reference — the q88 law over the stage table's token arrays (no
-    * extra text scan). Returns the fuzzily contaminated doc_ids.
-    */
-  def contamFuzzyGate(gated2: DataFrame, bench: DataFrame): DataFrame =
-    Dedup.nearDupAgainstT(
-        gated2.select(col("doc_id"), col("toks")),
-        bench.select(col("doc_id"), col("toks")))
-      .filter(col("is_match"))
-      .select("doc_id")
-
-  /** Semantic (embedding) contamination gate over the exact+fuzzy-
-    * decontaminated population: the q99 law — both sides embedded via
-    * the q80 md5 bag-of-words projection over the stage table's token
-    * arrays (no extra text scan), decided by
-    * [[TrainPrep.semContamDecisionsOn]] (the ONE rendering). Catches a
-    * fully REORDERED benchmark paraphrase, which shares neither an
-    * 8-gram (q38's gate) nor enough shingles (q88's): the bag-of-words
-    * embedding is token-order-independent, so the reorder lands at
-    * dot ≈ 1. Returns the semantically contaminated doc_ids.
-    */
-  def contamSemGate(gated3: DataFrame, bench: DataFrame): DataFrame =
-    TrainPrep.semContamDecisionsOn(
-        Dedup.textEmbedMd5From(gated3.select(col("doc_id"), col("toks"))),
-        Dedup.textEmbedMd5From(bench.select(col("doc_id"), col("toks"))))
-      .filter(col("contaminated_sem"))
-      .select("doc_id")
-
   def curateDecontam(
       docs: DataFrame,
       lang: String = "en",
@@ -344,8 +344,8 @@ object Curate {
   }
 
   /** [[curateDecontam]] as a checkpointed STAGED DAG: stage table →
-    * contamination gate → fuzzy-contamination gate → exact → near →
-    * clusters → decisions, each
+    * the three contamination rungs (8-gram, fuzzy, semantic; each over
+    * the gated population) → exact → near → clusters → decisions, each
     * stage a parquet checkpoint with per-stage retries and
     * resume-from-marker — the decontaminating flagship composed with
     * the orchestration layer. The contam stage persists the
@@ -375,18 +375,18 @@ object Curate {
     def bench(up: Map[String, DataFrame]) = up("staged").filter(col("doc_id") % 20 === 0)
     def corpus(up: Map[String, DataFrame]) = up("staged").filter(col("doc_id") % 20 =!= 0)
     def gated(up: Map[String, DataFrame]) = gatedOf(corpus(up), lang, minTokens)
-    def gated2(up: Map[String, DataFrame]) =
-      gated(up).join(up("contam"), Seq("doc_id"), "left_anti")
-    def gated3(up: Map[String, DataFrame]) =
-      gated2(up).join(up("contam_fuzzy"), Seq("doc_id"), "left_anti")
+    // the three rungs run over `gated`, as in [[curateDecontam]]: the
+    // dedup population anti-joins their union once
     def gated4(up: Map[String, DataFrame]) =
-      gated3(up).join(up("contam_sem"), Seq("doc_id"), "left_anti")
+      gated(up).join(
+        up("contam").unionAll(up("contam_fuzzy")).unionAll(up("contam_sem")).distinct(),
+        Seq("doc_id"), "left_anti")
     def reps(up: Map[String, DataFrame]) = repsOf(gated4(up), up("exact"))
     Seq(
       "staged" -> (_ => stageTable(docs)),
       "contam" -> (up => contamGate(gated(up), bench(up))),
-      "contam_fuzzy" -> (up => contamFuzzyGate(gated2(up), bench(up))),
-      "contam_sem" -> (up => contamSemGate(gated3(up), bench(up))),
+      "contam_fuzzy" -> (up => contamFuzzyGate(gated(up), bench(up))),
+      "contam_sem" -> (up => contamSemGate(gated(up), bench(up))),
       "exact" -> (up => exactGate(gated4(up))),
       "near" -> (up => attach(up("exact"), nearGate(reps(up), portableHash = true))),
       "clusters" -> (up => attach(up("exact"), famGate(reps(up)))),

@@ -209,12 +209,11 @@ object Multimodal {
 
   /** Row writer over the decoded raster: `(y, dst, off)` fills `dst`
     * from `off` with row y's ARGB ints — the ONE place the layout lanes
-    * live. [[argbOf]] materializes the full frame through it (the
-    * ScaleProbe15 measurement shape); the arithmetic passes
-    * ([[areaAverage]], [[imageFeatures]]) stream rows through a single
-    * reused w-int buffer, so their extra heap is O(w) regardless of
-    * frame size (a full-frame int array would add ~133% transient heap
-    * on top of the 3-byte raster for large frames).
+    * live. The arithmetic passes ([[areaAverage]], [[imageFeatures]])
+    * stream rows through a single reused w-int buffer, so their extra
+    * heap is O(w) regardless of frame size (a full-frame int array would
+    * add ~133% transient heap on top of the 3-byte raster for large
+    * frames).
     *
     * The fast lanes walk the Raster's backing byte array directly for
     * the interleaved-byte layouts ImageIO actually decodes into
@@ -271,19 +270,6 @@ object Multimodal {
       case _ =>
         (y, dst, off) => { img.getRGB(0, y, w, 1, dst, off, w); () }
     }
-  }
-
-  private[graft] def argbOf(img: java.awt.image.BufferedImage): Array[Int] = {
-    val w = img.getWidth
-    val h = img.getHeight
-    val out = new Array[Int](w * h)
-    val write = argbRowWriter(img)
-    var y = 0
-    while (y < h) {
-      write(y, out, y * w)
-      y += 1
-    }
-    out
   }
 
   /** Deterministic box-filter downscale: target pixel (tx, ty) is the

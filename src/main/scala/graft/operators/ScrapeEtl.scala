@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, ScrapePipeline, Tables}
 import RelationalCore.{dsum, davg}
 
 /** The reference pipeline's transforms, re-expressed as distributed
@@ -35,8 +35,8 @@ object ScrapeEtl {
           concat(lit("Rp"), regexp_replace(format_number(floor(col("p_retailprice") * 1000).cast(LongType), 0), ",", ".")).as("price_str"),
           concat(col("p_size").cast("string"), lit("%")).as("disc_str"),
         )
-        .withColumn("price_parsed", regexp_replace(regexp_replace(col("price_str"), "Rp", ""), "\\.", "").cast(LongType))
-        .withColumn("disc_parsed", regexp_replace(col("disc_str"), "%", "").cast("double") / 100)
+        .withColumn("price_parsed", ScrapePipeline.priceOf(col("price_str")))
+        .withColumn("disc_parsed", ScrapePipeline.discountOf(col("disc_str")))
         // Row-contract stamping (scrap_tokopedia.py:265-266): every loaded row
         // carries its platform and extraction date. Fixed literal (not now())
         // so the result is deterministic and oracle-comparable.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 
@@ -42,6 +42,30 @@ object Snapshot {
           .when(!(col("c.h") <=> col("x.h")), "changed")
           .otherwise("unchanged").as("change"))
 
+  // The refresh law's constants — one rendering shared by the frame
+  // builders below; [[nextSnapshotCte]] is its SQL twin.
+  private val RemovedMod = 31
+  private val RevisedMod = 17
+  private val AddedMod = 41
+  private val RevisedSuffix = " rev2"
+  private val AddedPrefix = "new doc "
+
+  private def kept(id: Column): Column = id % RemovedMod =!= 0
+  private def revised(id: Column): Column = id % RevisedMod === 0
+  private def revisedText: Column = concat(col("text"), lit(RevisedSuffix))
+
+  /** The added shifted-id slice: doc_id % 41 docs re-keyed past the
+    * corpus count with synthetic text. The 1-row count cross join is the
+    * q35 scalar-subquery shape.
+    */
+  private def added(docs: DataFrame): DataFrame = {
+    val n = docs.agg(count(lit(1)).cast("long").as("n"))
+    docs.filter(col("doc_id") % AddedMod === 0)
+      .crossJoin(broadcast(n))
+      .select((col("doc_id") + col("n")).as("doc_id"),
+        concat(lit(AddedPrefix), (col("doc_id") + col("n")).cast("string")).as("text"))
+  }
+
   /** The synthesized NEXT snapshot at TEXT level — the ONE rendering
     * of the refresh law (r20, factored from q100's hash-level inline):
     * drop doc_id % 31, append " rev2" to doc_id % 17's text, add a
@@ -51,50 +75,34 @@ object Snapshot {
     * different corpora to the diff and to the audit. NULL text flows
     * through unchanged concat semantics in both engines (NULL || x =
     * NULL), so md5-of-text equality with the pre-factor law is exact.
-    * The 1-row count cross join is the q35 scalar-subquery shape.
     */
-  def nextSnapshotDocsOn(docs: DataFrame): DataFrame = {
-    val n = docs.agg(count(lit(1)).cast("long").as("n"))
-    val revised = docs.filter(col("doc_id") % 31 =!= 0)
+  def nextSnapshotDocsOn(docs: DataFrame): DataFrame =
+    docs.filter(kept(col("doc_id")))
       .select(col("doc_id"),
-        when(col("doc_id") % 17 === 0, concat(col("text"), lit(" rev2")))
-          .otherwise(col("text")).as("text"))
-    val added = docs.filter(col("doc_id") % 41 === 0)
-      .crossJoin(broadcast(n))
-      .select((col("doc_id") + col("n")).as("doc_id"),
-        concat(lit("new doc "), (col("doc_id") + col("n")).cast("string")).as("text"))
-    revised.unionAll(added)
-  }
+        when(revised(col("doc_id")), revisedText).otherwise(col("text")).as("text"))
+      .unionAll(added(docs))
 
   /** The DELTA slice of [[nextSnapshotDocsOn]] — only the rows whose
     * text DIFFERS from the current snapshot: revised survivors
     * (doc_id % 17 = 0, text || " rev2") and the added shifted-id
-    * slice. Same law, same literals, factored as a projection (r21)
-    * so consumers that stage per-doc derivations (q110's trend audit)
-    * recompute only the ~8% that changed and reuse current-snapshot
-    * results for the unchanged rest, which [[survivesUnchanged]]
-    * selects. SnapshotSpec pins
-    * delta ∪ (current ∣ survivesUnchanged) ≡ [[nextSnapshotDocsOn]].
+    * slice. Same law, same constants and builders, so consumers that
+    * stage per-doc derivations (q110's trend audit) recompute only the
+    * ~8% that changed and reuse current-snapshot results for the
+    * unchanged rest, which [[survivesUnchanged]] selects. SnapshotSpec
+    * pins delta ∪ (current ∣ survivesUnchanged) ≡ [[nextSnapshotDocsOn]].
     */
-  def nextSnapshotDeltaDocsOn(docs: DataFrame): DataFrame = {
-    val n = docs.agg(count(lit(1)).cast("long").as("n"))
-    val revised = docs
-      .filter(col("doc_id") % 31 =!= 0 && col("doc_id") % 17 === 0)
-      .select(col("doc_id"), concat(col("text"), lit(" rev2")).as("text"))
-    val added = docs.filter(col("doc_id") % 41 === 0)
-      .crossJoin(broadcast(n))
-      .select((col("doc_id") + col("n")).as("doc_id"),
-        concat(lit("new doc "), (col("doc_id") + col("n")).cast("string")).as("text"))
-    revised.unionAll(added)
-  }
+  def nextSnapshotDeltaDocsOn(docs: DataFrame): DataFrame =
+    docs.filter(kept(col("doc_id")) && revised(col("doc_id")))
+      .select(col("doc_id"), revisedText.as("text"))
+      .unionAll(added(docs))
 
   /** Predicate over a CURRENT-snapshot doc id: the doc survives into
     * the next snapshot with byte-identical text — not removed (% 31)
     * and not revised (% 17). The complement-in-law of
     * [[nextSnapshotDeltaDocsOn]].
     */
-  def survivesUnchanged(id: org.apache.spark.sql.Column = col("doc_id")): org.apache.spark.sql.Column =
-    id % 31 =!= 0 && id % 17 =!= 0
+  def survivesUnchanged(id: Column = col("doc_id")): Column =
+    kept(id) && id % RevisedMod =!= 0
 
   /** SQL rendering of [[nextSnapshotDocsOn]] — defines `nn` and
     * `nxtdocs(doc_id, text)`; composable under any oracle that reads

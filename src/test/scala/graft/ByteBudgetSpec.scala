@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Attribution mechanics (unique job group, stage-id scoped listener)
   * live in graft.ShuffleAttribution — ONE rendering shared with the
-  * MeasureBytes calibration tool.
+  * `graft.Dev bytes` calibration tool.
   */
 class ByteBudgetSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark

@@ -38,6 +38,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(ScrapePipeline.table(spark, cfg).count() == 2)
   }
 
+  test("unparseable fields: a bad price is quarantined, bad optional fields load as NULL") {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp/graft-test/pipeline-bad"))
+    val cfg = SinkConfig(path = "/tmp/graft-test/pipeline-bad")
+    val batch = raw(Seq(
+      (1L, "soap", "bar", "Rp12a.000", "Rp15.000", "17%"), // bad price
+      (2L, "tea", "box", "Rp8.000", "Rp8.000", "x%"),      // bad discount
+      (3L, "milk", "carton", "Rp5.000", "Rp5.0o0", "10%"), // bad original price
+    ))
+    val quarantined = ScrapePipeline.run(batch, cfg).collect()
+    assert(quarantined.map(_.getAs[Long]("id")).toSeq == Seq(1L), "the bad-price row is quarantined")
+    val rows = ScrapePipeline.table(spark, cfg).collect().map(r => r.getAs[Long]("id") -> r).toMap
+    assert(rows.keySet == Set(2L, 3L), "the batch loads its other rows")
+    assert(rows(2L).isNullAt(rows(2L).fieldIndex("discountpercentage")))
+    assert(rows(2L).getAs[Long]("originalprice") == 8000L)
+    assert(rows(3L).isNullAt(rows(3L).fieldIndex("originalprice")))
+    assert(rows(3L).getAs[Long]("price") == 5000L)
+    assert(math.abs(rows(3L).getAs[Double]("discountpercentage") - 0.10) < 1e-9)
+  }
+
   test("staged DAG run matches the one-shot pipeline and reports its stages") {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp/graft-test/staged"))
     val cfg = SinkConfig(path = "/tmp/graft-test/staged/sink")

@@ -322,6 +322,49 @@ class CosineSimSpec extends AnyFunSuite {
     val nullDims = analysisError("SELECT hashed_projection(array('a'), CAST(NULL AS INT))")
     assert(nullDims.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
     assert(nullDims.getMessage.contains("hashed_projection"))
+    // every kernel's builder runs the same guard: each bad call raises
+    // its analysis error class instead of IndexOutOfBounds, ClassCast or
+    // an unevaluable-expression INTERNAL_ERROR
+    val v = "array(CAST(1.0 AS FLOAT))"
+    Seq(
+      ("cosine_sim", s"SELECT cosine_sim($v)", "WRONG_NUM_ARGS.WITHOUT_SUGGESTION"),
+      ("pq_codes", s"SELECT pq_codes($v)", "WRONG_NUM_ARGS.WITHOUT_SUGGESTION"),
+      ("nearest_centroid",
+        s"SELECT nearest_centroid($v, $v, k, 1) FROM (SELECT 1 AS k WHERE rand() < 2)",
+        "NON_FOLDABLE_ARGUMENT"),
+      ("hyperplane_bands", s"SELECT hyperplane_bands($v, '4', 2, 1)",
+        "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"),
+      ("mat_vec", s"SELECT mat_vec($v, CAST(NULL AS ARRAY<FLOAT>), 1)",
+        "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"),
+    ).foreach { case (name, sql, condition) =>
+      val e = analysisError(sql)
+      assert(e.getCondition == condition, sql)
+      assert(e.getMessage.contains(name), sql)
+    }
+  }
+
+  test("every kernel in the registration table resolves to the class its ExpressionInfo names") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType}
+    val kernels = GraftExtensions.kernels
+    assert(kernels.size == 29 && kernels.map(_.name).distinct.size == 29)
+    val registry = spark.sessionState.functionRegistry
+    kernels.foreach { k =>
+      val id = FunctionIdentifier(k.name)
+      val info = registry.lookupFunction(id).getOrElse(fail(s"${k.name} not registered"))
+      assert(info.getClassName == k.cls.getName, k.name)
+      // a well-formed call: any expression for a column argument, a
+      // literal of the declared type for a literal one
+      val args = k.params.map(_.literal match {
+        case Some(IntegerType) => Literal(1)
+        case Some(ArrayType(FloatType, _)) => Literal(Array(1.0f))
+        case Some(ArrayType(LongType, _)) => Literal(Array(1L))
+        case _ => Literal(1L)
+      })
+      val built = registry.lookupFunctionBuilder(id).get(args)
+      assert(built.getClass.getName == info.getClassName, k.name)
+    }
   }
 
   test("cosine_sim runs inside WholeStageCodegen (no fallback)") {

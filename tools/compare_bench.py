@@ -18,7 +18,7 @@ def table(field, label, fmt, min_abs, ratio_gate):
     ups, downs = [], []
     for k in common:
         a, b = p[k], n[k]
-        if max(a, b) < min_abs or a == 0:
+        if a is None or b is None or max(a, b) < min_abs or a == 0:
             continue
         r = b / a
         if r >= ratio_gate:
@@ -43,7 +43,12 @@ fs = lambda v: f"{v:.2f}s"
 table("shuffle_write_prod", "prod shuffle write (>=100KB, x1.3 gate)", fb, 100_000, 1.3)
 table("shuffle_write", "oracle shuffle write (>=100KB, x1.3 gate)", fb, 100_000, 1.3)
 table("queries", "oracle wall medians (>=1s, x1.5 gate — NOISY)", fs, 1.0, 1.5)
-print(f"totals: oracle {prev.get('value'):.1f} -> {now.get('value'):.1f} s, "
-      f"prod {prev.get('total_prod'):.1f} -> {now.get('total_prod'):.1f} s")
+def total(art, key):
+    """A total as "12.3", or "n/a" when an artifact does not carry it."""
+    v = art.get(key)
+    return f"{v:.1f}" if isinstance(v, (int, float)) else "n/a"
+
+print(f"totals: oracle {total(prev, 'value')} -> {total(now, 'value')} s, "
+      f"prod {total(prev, 'total_prod')} -> {total(now, 'total_prod')} s")
 print(f"geomean speedup (prev/now): oracle wall x{geomean('queries'):.3f}, "
       f"prod wall x{geomean('queries_prod'):.3f}")
