@@ -65,28 +65,12 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // stage-level shuffle accounting — reset, run, drain the async
-    // listener bus, read: exact per-query attribution, bit-stable
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(
-            m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead)
-        }
+    // per-query shuffle bytes through the one attribution rendering
+    // (job-group scoped, listener bus drained): bit-stable columns
+    def bytesOf(q: graft.GraftQuery, prod: Boolean): ShuffleAttribution.Bytes =
+      ShuffleAttribution.measure(spark, s"bench-${q.name}") {
+        try run(q, prod) catch { case _: Throwable => () }
       }
-    })
-    def bytesOf(q: graft.GraftQuery, prod: Boolean): (Long, Long) = {
-      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
-      shufWrite.set(0L); shufRead.set(0L)
-      try run(q, prod) catch { case _: Throwable => () }
-      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
-      (shufWrite.get, shufRead.get)
-    }
     def rowsOf(q: graft.GraftQuery): Long =
       try q.run(spark, sfDir).count() catch { case _: Throwable => -1L }
     def objL(results: Seq[(String, Long)]) =
@@ -120,7 +104,7 @@ object Bench {
         q.name -> medianMin(Seq(timed(q, true), timed(q, true), timed(q, true)))
       }
       val total = results.map(_._2._1).sum
-      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)(_._1)},"queries_min":${obj(results)(_._2)},"total_min":${results.map(_._2._2).sum},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2._1))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2._2))},"mode":"prod","sf":"$sfDir"}""")
+      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)(_._1)},"queries_min":${obj(results)(_._2)},"total_min":${results.map(_._2._2).sum},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"mode":"prod","sf":"$sfDir"}""")
     } else {
       // warm both modes, then alternate oracle/prod samples per query;
       // within-pair order swaps per iteration so carryover averages out
@@ -147,7 +131,7 @@ object Bench {
       val prod = both.map { case (n, _, p) => n -> p }
       val total = oracle.map(_._2._1).sum
       val totalProd = prod.map(_._2._1).sum
-      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(oracle)(_._1)},"queries_min":${obj(oracle)(_._2)},"total_min":${oracle.map(_._2._2).sum},"queries_prod":${obj(prod)(_._1)},"total_prod":$totalProd,"shuffle_write":${objL(bytesOracle.map(b => b._1 -> b._2._1))},"shuffle_read":${objL(bytesOracle.map(b => b._1 -> b._2._2))},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2._1))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2._2))},"rows":${objL(rowCounts)},"sf":"$sfDir"}""")
+      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(oracle)(_._1)},"queries_min":${obj(oracle)(_._2)},"total_min":${oracle.map(_._2._2).sum},"queries_prod":${obj(prod)(_._1)},"total_prod":$totalProd,"shuffle_write":${objL(bytesOracle.map(b => b._1 -> b._2.write))},"shuffle_read":${objL(bytesOracle.map(b => b._1 -> b._2.read))},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"rows":${objL(rowCounts)},"sf":"$sfDir"}""")
     }
     spark.stop()
   }

@@ -75,8 +75,10 @@ object Dev {
       }
       spark.sparkContext.setJobDescription(s"focused-$name")
       run(spark, sfDir, q, prod = false); run(spark, sfDir, q, prod = true) // warm-up, untimed
-      val bo = ShuffleAttribution.measure(spark, s"fb-o-$name")(run(spark, sfDir, q, prod = false))
-      val bp = ShuffleAttribution.measure(spark, s"fb-p-$name")(run(spark, sfDir, q, prod = true))
+      def written(label: String, prod: Boolean): Long =
+        ShuffleAttribution.measure(spark, label)(run(spark, sfDir, q, prod)).write
+      val bo = written(s"fb-o-$name", prod = false)
+      val bp = written(s"fb-p-$name", prod = true)
       val samples = (1 to 3).map { i =>
         if (i % 2 == 1) { val o = timed(false); val p = timed(true); (o, p) }
         else { val p = timed(true); val o = timed(false); (o, p) }
@@ -88,7 +90,8 @@ object Dev {
   private def bytes(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     names.foreach { name =>
       val q = query(name)
-      val b = ShuffleAttribution.measure(spark, s"measure-$name")(run(spark, sfDir, q, prod = true))
+      val b =
+        ShuffleAttribution.measure(spark, s"measure-$name")(run(spark, sfDir, q, prod = true)).write
       println(s"""[measure] ("$name", ${b}L, ${b * 3}L),""")
     }
 

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Job-group-scoped shuffle-write attribution — the ONE rendering of
-  * the measurement discipline shared by ByteBudgetSpec (the suite
-  * gate) and `graft.Dev bytes` (the calibration tool), so the printed
-  * calibration rows and the asserted budgets can never drift apart on
-  * measurement mechanics.
+/** Job-group-scoped shuffle attribution — the ONE rendering of the
+  * measurement discipline shared by ByteBudgetSpec (the suite gate),
+  * `graft.Dev bytes` (the calibration tool) and [[Bench]]'s per-query
+  * byte columns, so the printed calibration rows, the asserted budgets
+  * and the bench JSON can never drift apart on measurement mechanics.
   *
   * Discipline: suites share one SparkContext and may run concurrently,
   * so a global listener would co-count other workloads' stages. Each
@@ -18,11 +18,18 @@ import org.apache.spark.sql.SparkSession
   * only for those stages, draining the listener bus before reading.
   */
 object ShuffleAttribution {
-  def measure(spark: SparkSession, label: String)(body: => Unit): Long = {
+
+  /** Shuffle bytes a measured body moved: written, and read (remote +
+    * local).
+    */
+  final case class Bytes(write: Long, read: Long)
+
+  def measure(spark: SparkSession, label: String)(body: => Unit): Bytes = {
     val sc = spark.sparkContext
     val group = s"$label-${java.util.UUID.randomUUID()}"
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val read = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
@@ -32,7 +39,12 @@ object ShuffleAttribution {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         if (stages.contains(s.stageInfo.stageId)) {
           val m = s.stageInfo.taskMetrics
-          if (m != null) { bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () }
+          if (m != null) {
+            written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+            read.addAndGet(
+              m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead)
+            ()
+          }
         }
     }
     sc.addSparkListener(listener)
@@ -43,7 +55,7 @@ object ShuffleAttribution {
       try body
       finally sc.clearJobGroup()
       org.apache.spark.graft.ListenerSync.drain(sc)
-      bytes.get
+      Bytes(written.get, read.get)
     } finally sc.removeSparkListener(listener)
   }
 }

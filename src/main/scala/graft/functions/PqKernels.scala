@@ -32,6 +32,13 @@ import org.apache.spark.sql.types._
   */
 object PqKernels {
 
+  /** Subspace width of a (m, ksub) codebook; 0 for a non-positive shape,
+    * so a zero m or ksub reaches the kernels' `checkInputDataTypes` as an
+    * analysis error instead of dividing by zero in the constructor.
+    */
+  private[functions] def dsubOf(codebook: Array[Float], m: Int, ksub: Int): Int =
+    if (m > 0 && ksub > 0) codebook.length / (m * ksub) else 0
+
   /** Encode one vector: per subspace, argmin squared-L2 over the ksub
     * centroids; ties break on the LOWER centroid id. One byte per
     * subspace (ksub <= 256; codes stored as the low 8 bits, read back
@@ -422,7 +429,7 @@ object PqResidKernels {
 case class PqCodes(vec: Expression, codebook: Array[Float], m: Int, ksub: Int)
     extends UnaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def child: Expression = vec
 
@@ -461,7 +468,7 @@ case class PqCodes(vec: Expression, codebook: Array[Float], m: Int, ksub: Int)
 case class PqLut(qvec: Expression, codebook: Array[Float], m: Int, ksub: Int)
     extends UnaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def child: Expression = qvec
 
@@ -504,7 +511,7 @@ case class PqResidCodes(
     centroids: Array[Float], codebook: Array[Float], m: Int, ksub: Int)
     extends BinaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def left: Expression = vec
   override def right: Expression = cluster
@@ -550,7 +557,7 @@ case class PqResidLut(
     qvec: Expression, centroids: Array[Float], codebook: Array[Float], m: Int, ksub: Int)
     extends UnaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def child: Expression = qvec
 
@@ -594,7 +601,7 @@ case class PqResidSim(
     centroids: Array[Float], codebook: Array[Float], m: Int, ksub: Int)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def first: Expression = codes
   override def second: Expression = lut
@@ -652,7 +659,7 @@ case class PqAsymSim(
     codes: Expression, qvec: Expression, codebook: Array[Float], m: Int, ksub: Int)
     extends BinaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def left: Expression = codes
   override def right: Expression = qvec
@@ -703,7 +710,7 @@ case class PqAsymSim(
 case class PqAdcSim(codes: Expression, lut: Expression, codebook: Array[Float], m: Int, ksub: Int)
     extends BinaryExpression with ModelArrayEquality {
 
-  private val dsub: Int = codebook.length / (m * ksub)
+  private val dsub: Int = PqKernels.dsubOf(codebook, m, ksub)
 
   override def left: Expression = codes
   override def right: Expression = lut

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.gfunctions.cosine_sim
@@ -21,6 +22,9 @@ import graft.gfunctions.cosine_sim
   *  - Assignment = argmax over k literal centroids through the native
   *    codegen'd cosine kernel; candidates come from an equi-join on
   *    cluster id. Never a corpus cross join.
+  *  - What the lists store, and how a query scores against it, is a
+  *    [[Codec]]: in-memory search, index write, append and serve are
+  *    each written once over it.
   */
 object Ivf {
 
@@ -74,7 +78,7 @@ object Ivf {
     * vectors per centroid pins it: sampling bounds training cost by the
     * MODEL size instead of the corpus size, while assignment (the one
     * full pass that must see every vector) stays exact in
-    * [[topK]]/[[topKInt8]]/[[writeIndex]]. `sampleFactor <= 0` disables.
+    * [[topK]]/[[writeIndex]]. `sampleFactor <= 0` disables.
     */
   private[graft] def trainingSample(emb: DataFrame, k: Int, sampleFactor: Long): DataFrame = {
     if (sampleFactor <= 0) emb
@@ -125,135 +129,344 @@ object Ivf {
     centroids
   }
 
-  /** IVF search: corpus rows keep 1 cluster; queries probe `nprobe`
-    * clusters; candidates = equi-join on cluster; exact cosine rank.
+  // ------------------------------------------------------------- codecs
+
+  /** One list-code form: how a vector becomes an inverted-list code and
+    * how a query scores against that code, written once per form.
+    * List ASSIGNMENT is not part of a codec — every form assigns at full
+    * precision against the same raw-space coarse quantizer (the standard
+    * IVF-then-quantize build order), so quantization error never moves
+    * a vector into the wrong list. A codec owns:
+    *  - `column`: the list column its codes live in;
+    *  - `encode`: the list-side code of a vector assigned to `cluster`;
+    *  - `query`: the query-side operand (codes, a LUT, or the vector
+    *    itself) that rides the broadcast probe frame;
+    *  - `sim`: the cosine estimate of list codes against that operand.
+    * Every form is handed the coarse centroids because the residual form
+    * encodes and scores against them.
+    */
+  sealed abstract class Codec(private[graft] val column: String) {
+    private[graft] def encode(vec: Column, cluster: Column, centroids: Array[Array[Float]]): Column
+    private[graft] def query(vec: Column, centroids: Array[Array[Float]]): Column
+    private[graft] def sim(
+        codes: Column, q: Column, cluster: Column, centroids: Array[Array[Float]]): Column
+  }
+
+  /** A form [[writeIndex]] can persist. `oversample` is the default
+    * coarse-candidate multiplier of [[searchIndexRerank]]: 10 for int8,
+    * 20 for the coarser PQ-family cells (see [[Pq.pqRerankTopK]]).
+    */
+  sealed abstract class Persisted(column: String, private[graft] val oversample: Int)
+      extends Codec(column) {
+    /** Persist the form's model under the index root; int8 has none. */
+    private[graft] def writeModel(spark: SparkSession, root: String): Unit = ()
+  }
+
+  /** A model-carrying persisted form as it sits on disk: its list column
+    * and the underscore-hidden model subdir whose PRESENCE is the
+    * dispatch bit [[Codec.of]] reads.
+    */
+  sealed abstract class Form(private[graft] val column: String, private[graft] val subdir: String) {
+    private[graft] def read(spark: SparkSession, root: String): Persisted
+  }
+
+  object Codec {
+
+    /** Exact float cosine over the raw embedding — in-memory [[topK]]
+      * only; there is no persisted float layout.
+      */
+    case object Float32 extends Codec("embedding") {
+      private[graft] def encode(vec: Column, cluster: Column, c: Array[Array[Float]]): Column = vec
+      private[graft] def query(vec: Column, c: Array[Array[Float]]): Column = vec
+      private[graft] def sim(
+          codes: Column, q: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        cosine_sim(codes, q)
+    }
+
+    /** Packed int8, 1 byte/dim, scored by the native integer
+      * [[graft.functions.Int8Cosine]] kernel; per-vector scales cancel in
+      * cosine, so the scale is never read at search time.
+      */
+    case object Int8 extends Persisted("codes_bin", 10) {
+      private[graft] def encode(vec: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.int8_codes(vec)
+      private[graft] def query(vec: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.int8_codes(vec)
+      private[graft] def sim(
+          codes: Column, q: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.int8_cosine(codes, q)
+    }
+
+    /** m-byte PQ codes of the raw vector (8 B at the defaults, 8x below
+      * int8), scored by ADC: the per-query LUT rides the broadcast probe
+      * side and each candidate costs m table lookups. At full probe the
+      * in-memory form equals [[graft.operators.Pq.topKPq]] row for row.
+      * The codebook persists under `_pq`, one row per entry plus the
+      * (m, ksub) shape.
+      */
+    final case class Pq(model: graft.operators.Pq.Model) extends Persisted(Pq.column, 20) {
+      import model.{codebook, ksub, m}
+      private[graft] def encode(vec: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_codes(vec, codebook, m, ksub)
+      private[graft] def query(vec: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_lut(vec, codebook, m, ksub)
+      private[graft] def sim(
+          codes: Column, q: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_adc_sim(codes, q, codebook, m, ksub)
+      private[graft] override def writeModel(spark: SparkSession, root: String): Unit =
+        writePqModel(spark, model, s"$root/${Pq.subdir}")
+    }
+    object Pq extends Form("codes_pq", "_pq") {
+      private[graft] def read(spark: SparkSession, root: String): Persisted =
+        Pq(readPqModel(spark, s"$root/$subdir"))
+    }
+
+    /** Residual PQ, the textbook IVFPQ refinement: m-byte codes of
+      * vec - centroid[cluster], scored by the EXACT reconstruction cosine
+      * through cluster-conditioned tables ([[graft.gfunctions.pq_resid_sim]]
+      * — the cross terms are plan-time constants and the partition column
+      * itself feeds the kernel, so list rows stay m bytes). The residual
+      * codebook persists under `_pq_resid`, apart from `_pq`, because its
+      * codes index a different codebook. It is the default 8-byte rung:
+      * in the ladder probe (ScaleProbe24, dense 200k corpus,
+      * rerank@100x) it recovers recall@10 = 1.000 where raw PQ and OPQ
+      * leave 0.981.
+      */
+    final case class PqResid(model: graft.operators.Pq.Model)
+        extends Persisted(PqResid.column, 20) {
+      import model.{codebook, ksub, m}
+      private[graft] def encode(vec: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_resid_codes(vec, cluster, c.flatten, codebook, m, ksub)
+      private[graft] def query(vec: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_resid_lut(vec, c.flatten, codebook, m, ksub)
+      private[graft] def sim(
+          codes: Column, q: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        graft.gfunctions.pq_resid_sim(codes, q, cluster, c.flatten, codebook, m, ksub)
+      private[graft] override def writeModel(spark: SparkSession, root: String): Unit =
+        writePqModel(spark, model, s"$root/${PqResid.subdir}")
+    }
+    object PqResid extends Form("codes_pqr", "_pq_resid") {
+      private[graft] def read(spark: SparkSession, root: String): Persisted =
+        PqResid(readPqModel(spark, s"$root/$subdir"))
+    }
+
+    /** OPQ: PQ in a learned rotated space, the rotation fused into both
+      * projections. Assignment stays raw-space (orthogonal rotations
+      * preserve cosine), so one coarse quantizer serves every form; codes
+      * and the query LUT live in the rotated space where the cells fit
+      * better (OpqSpec: 82.8% of plain PQ's quantization error on real
+      * embeddings). The model persists under `_opq`: the rotation at
+      * `_opq/rotation` (one row per matrix row) and the rotated-space
+      * codebook at `_opq/pq` (the `_pq` row shape).
+      */
+    final case class Opq(model: graft.operators.Opq.Model) extends Persisted(Opq.column, 20) {
+      private def rotated(vec: Column): Column =
+        graft.gfunctions.mat_vec(vec, model.rotation, model.dims)
+      private[graft] def encode(vec: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        Pq(model.pq).encode(rotated(vec), cluster, c)
+      private[graft] def query(vec: Column, c: Array[Array[Float]]): Column =
+        Pq(model.pq).query(rotated(vec), c)
+      private[graft] def sim(
+          codes: Column, q: Column, cluster: Column, c: Array[Array[Float]]): Column =
+        Pq(model.pq).sim(codes, q, cluster, c)
+      private[graft] override def writeModel(spark: SparkSession, root: String): Unit = {
+        import spark.implicits._
+        val d = model.dims
+        (0 until d)
+          .map(i => (d, i, (0 until d).map(j => model.rotation(i * d + j))))
+          .toDF("dims", "row", "values")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$root/${Opq.subdir}/rotation")
+        writePqModel(spark, model.pq, s"$root/${Opq.subdir}/pq")
+      }
+    }
+    object Opq extends Form("codes_opq", "_opq") {
+      private[graft] def read(spark: SparkSession, root: String): Persisted = {
+        val rows = spark.read.parquet(s"$root/$subdir/rotation").orderBy("row").collect()
+        Opq(graft.operators.Opq.Model(
+          rows.flatMap(_.getSeq[Float](2)).toArray, readPqModel(spark, s"$root/$subdir/pq")))
+      }
+    }
+
+    /** The model-carrying forms, in dispatch order. */
+    private val forms: Seq[Form] = Seq(Opq, PqResid, Pq)
+
+    /** Every model subdir an index root may hold, the quantizer first. */
+    private[graft] val modelSubdirs: Seq[String] = QuantizerSubdir +: forms.map(_.subdir)
+
+    /** Every list column a persisted form stores its codes in. */
+    private[graft] val codeColumns: Set[String] = forms.map(_.column).toSet + Int8.column
+
+    /** The form of the persisted index at `dir`, read from its live root:
+      * the model subdir present picks the form, int8 when none is, and
+      * the model is read once.
+      */
+    def of(spark: SparkSession, dir: String): Persisted = {
+      val root = liveRoot(spark, dir)
+      val fs = fsOf(spark, dir)
+      forms.find(f => fs.exists(new Path(s"$root/${f.subdir}")))
+        .fold[Persisted](Int8)(_.read(spark, root))
+    }
+  }
+
+  private def writePqModel(spark: SparkSession, model: Pq.Model, path: String): Unit = {
+    import spark.implicits._
+    val dsub = model.dsub
+    (0 until model.m * model.ksub)
+      .map(e => (model.m, model.ksub, e, (0 until dsub).map(i => model.codebook(e * dsub + i))))
+      .toDF("m", "ksub", "entry", "centroid")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(path)
+  }
+
+  private def readPqModel(spark: SparkSession, path: String): Pq.Model = {
+    val rows = spark.read.parquet(path).orderBy("entry").collect()
+    Pq.Model(rows.flatMap(_.getSeq[Float](3)).toArray, rows.head.getInt(0), rows.head.getInt(1))
+  }
+
+  // ------------------------------------------------------ search, in memory
+
+  /** The probe frame (query_id, qside, cluster): one row per query and
+    * probed list, the codec's query operand in `qside`.
+    */
+  private def probes(
+      queries: DataFrame, centroids: Array[Array[Float]], nprobe: Int, codec: Codec): DataFrame =
+    queries.select(
+      col("vec_id").as("query_id"), codec.query(col("embedding"), centroids).as("qside"),
+      explode(transform(
+        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
+        s => -s.getField("neg_id"))).as("cluster"))
+
+  /** The inverted lists (vec_id, <codec column>, cluster, metaCols...):
+    * full-precision assignment first, then the codec's encode against the
+    * assigned cluster.
+    */
+  private def listed(
+      corpus: DataFrame, centroids: Array[Array[Float]], codec: Codec,
+      metaCols: Seq[String] = Nil): DataFrame = {
+    val meta = metaCols.map(col)
+    corpus
+      .select(Seq(col("vec_id"), col("embedding"),
+        clusterOf(col("embedding"), centroids).cast("int").as("cluster")) ++ meta: _*)
+      .select(Seq(col("vec_id"),
+        codec.encode(col("embedding"), col("cluster"), centroids).as(codec.column),
+        col("cluster")) ++ meta: _*)
+  }
+
+  /** Candidates = lists equi-joined on cluster with the broadcast probes
+    * (a query never matches itself), scored by the codec's `sim`, top-k
+    * per query — shared by in-memory search and every served layout.
+    */
+  private def rank(
+      lists: DataFrame, probed: DataFrame, k: Int, codec: Codec,
+      centroids: Array[Array[Float]]): DataFrame = {
+    val cand = lists.alias("c")
+      .join(broadcast(probed.alias("q")),
+        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
+      .select(
+        col("query_id"), col("c.vec_id").as("neighbor_id"),
+        codec.sim(col(s"c.${codec.column}"), col("qside"), col("c.cluster").cast("int"), centroids)
+          .as("sim"))
+    Similarity.rankTopK(cand, k)
+  }
+
+  /** IVF search in memory: corpus rows keep 1 cluster; queries probe
+    * `nprobe` clusters; candidates = equi-join on cluster, scored by
+    * `codec` — exact float cosine by default, or any persisted form
+    * without writing it (at full probe the served index ranks the same
+    * rows; the parity specs pin it).
     */
   def topK(
       corpus: DataFrame,
       queries: DataFrame,
       centroids: Array[Array[Float]],
       k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    val listed = corpus.select(
-      col("vec_id"), col("embedding"),
-      clusterOf(col("embedding"), centroids).as("cluster"))
-    val probes = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("qvec"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(
-        col("query_id"), col("c.vec_id").as("neighbor_id"),
-        cosine_sim(col("c.embedding"), col("qvec")).as("sim"))
-    Similarity.rankTopK(cand, k)
-  }
+      nprobe: Int = 2,
+      codec: Codec = Codec.Float32): DataFrame =
+    rank(listed(corpus, centroids, codec), probes(queries, centroids, nprobe, codec),
+      k, codec, centroids)
 
-  /** QUANTIZED IVF search — the 100 TB ANN serving shape: IVF prunes the
-    * COMPUTE (a query touches nprobe lists, not the corpus) and packed
-    * int8 prunes the MEMORY (1 byte/dim in the inverted lists instead of
-    * 4+), so the index a 1000-executor cluster holds hot is dims bytes
-    * per vector plus a cluster id.
-    *
-    * List assignment stays FULL-precision — it happens once at index
-    * build, where the float vectors are already in hand, so quantization
-    * error never moves a vector into the wrong list (the standard
-    * IVF-then-quantize build order). Only the per-candidate scoring
-    * inside probed lists runs on packed codes via the native integer
-    * [[graft.functions.Int8Cosine]] kernel; per-vector scales cancel in
-    * cosine, so the scale column is never read at search time.
-    */
-  def topKInt8(
-      corpus: DataFrame,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.{int8_codes, int8_cosine}
-    val listed = corpus.select(
-      col("vec_id"), int8_codes(col("embedding")).as("codes_bin"),
-      clusterOf(col("embedding"), centroids).as("cluster"))
-    val probes = queries.select(
-      col("vec_id").as("query_id"), int8_codes(col("embedding")).as("qcodes"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(
-        col("query_id"), col("c.vec_id").as("neighbor_id"),
-        int8_cosine(col("c.codes_bin"), col("qcodes")).as("sim"))
-    Similarity.rankTopK(cand, k)
-  }
-
-  /** PERSIST the quantized IVF index: one parquet table of (vec_id,
-    * packed codes) PARTITIONED BY cluster id — the inverted lists ARE
-    * the partition layout. Build once per corpus snapshot (train +
-    * assign + quantize in a single pass over the float vectors), serve
-    * many: the index a 100 TB corpus keeps on disk is dims bytes per
-    * vector plus the directory structure.
-    */
-  def writeIndex(corpus: DataFrame, centroids: Array[Array[Float]], dir: String): Unit =
-    writeIndex(corpus, centroids, dir, Nil)
-
-  /** [[writeIndex]] carrying passthrough METADATA columns into the
-    * inverted lists (source, license, date — whatever serving filters
-    * on). The cost is explicit: metadata rides every list row, so keep
-    * it to the few small columns queries actually filter by — the
-    * standard filtered-ANN trade (filter state lives IN the index so
-    * the scan can push it down; a post-join attribute lookup would
-    * re-touch the corpus per candidate instead).
-    */
-  def writeIndex(
-      corpus: DataFrame, centroids: Array[Array[Float]], dir: String,
-      metaCols: Seq[String]): Unit = {
-    writeIndexAssigned(corpus, clusterOf(col("embedding"), centroids), dir, metaCols)
-    writeCentroids(corpus.sparkSession, centroids, dir)
-  }
+  // --------------------------------------------------------- persisted index
 
   /** The quantizer is VERSIONED WITH the index, literally: [[writeIndex]]
     * persists the centroids under `dir/_quantizer` (the underscore
     * prefix hides the subdir from Spark's data-file listing, so reading
     * the inverted lists at `dir` is unaffected — the `_spark_metadata`
-    * convention). Serving and appending can then be self-describing:
-    * the [[searchIndex]]/[[searchIndexRerank]]/[[appendIndex]] overloads
-    * without a centroids argument read it back, which makes the
-    * append contract ("assign against the index's OWN centroids")
-    * impossible to get wrong by passing a retrained array.
+    * convention). Serve and append read it back, so the append contract
+    * ("assign against the index's OWN centroids") cannot be broken by
+    * passing a retrained array.
     */
   private val QuantizerSubdir = "_quantizer"
 
-  private def writeCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Float]], dir: String): Unit = {
+  /** PERSIST an IVF index: one parquet table of (vec_id, codes,
+    * metaCols...) PARTITIONED BY cluster id — the inverted lists ARE the
+    * partition layout — with the coarse quantizer and the codec's model
+    * beside it, so serving and appending are fully self-describing.
+    * Build once per corpus snapshot, serve many. Int8 lists cost dims
+    * bytes per vector, the PQ family m bytes (8 B at the defaults).
+    *
+    * `metaCols` are passthrough columns (source, license, date — whatever
+    * serving filters on) riding every list row: filter state lives IN the
+    * index so the pruned scan can push it down, the standard filtered-ANN
+    * trade. Keep them to the few small columns queries filter by; with
+    * 8-byte codes the metadata is often larger than the vector payload.
+    *
+    * The rows SHUFFLE onto their cluster before the partitioned write:
+    * without it every write task fans a file into every cluster dir it
+    * sees — ScaleProbe17 measured 32,768 files for a k=1024 index from
+    * 32 tasks (tasks x clusters), with the write at 57.9 s and every
+    * pruned serve paying a file listing/open tax (4.3 s/probe set) that
+    * grows with executor count. Cluster-aligned, each inverted list is
+    * one file (tasks carrying several clusters still cut one file per
+    * cluster): same index, 1,024 files, write 9.0 s, warm pruned serve
+    * 1.8 s. Lists that outgrow a sane file size split via
+    * `spark.sql.files.maxRecordsPerFile` — a size bound, not a
+    * task-count artifact.
+    */
+  def writeIndex(
+      corpus: DataFrame, centroids: Array[Array[Float]], dir: String,
+      metaCols: Seq[String] = Nil, codec: Persisted = Codec.Int8): Unit = {
+    val spark = corpus.sparkSession
+    resetIndexState(spark, dir)
+    listed(corpus, centroids, codec, metaCols)
+      .repartition(col("cluster"))
+      .write.partitionBy("cluster").mode("overwrite").parquet(dir)
     import spark.implicits._
     centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }
       .toDF("cluster", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/$QuantizerSubdir")
+    codec.writeModel(spark, dir)
   }
 
-  def readCentroids(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Float]] =
+  /** Full-rebuild reset: a rebuild is a NEW index, so the generation
+    * pointer, old generations, batch areas, replay markers, AND the
+    * model subdirs all go — a stale model subdir (the dispatch bit)
+    * from a previous layout would otherwise make self-describing
+    * appends encode to the WRONG code form against the new lists.
+    * (Contract: use a fresh stream checkpoint after a rebuild — an old
+    * checkpoint would re-deliver batches the new index never saw.)
+    */
+  private def resetIndexState(spark: SparkSession, dir: String): Unit =
+    graft.sources.Generations.reset(
+      fsOf(spark, dir), dir, Seq(AppendsDataSubdir, AppendsSubdir) ++ Codec.modelSubdirs)
+
+  /** The coarse quantizer persisted with the index at `dir`. */
+  def readCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
     spark.read.parquet(s"${liveRoot(spark, dir)}/$QuantizerSubdir")
       .orderBy("cluster").collect()
       .map(_.getSeq[Float](1).toArray)
 
-  private def fsOf(
-      spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The current base-generation root of an index directory — `dir`
     * itself until the first [[compactIndex]], the `_current`-pointed
     * generation after ([[graft.sources.Generations]] is the shared
     * commit protocol). Model subdirs live under this root.
     */
-  private def liveRoot(spark: org.apache.spark.sql.SparkSession, dir: String): String =
+  private def liveRoot(spark: SparkSession, dir: String): String =
     graft.sources.Generations.resolveRoot(fsOf(spark, dir), dir)
 
   /** The live inverted lists of a persisted index: the current base
@@ -269,230 +482,102 @@ object Ivf {
     * either visible in full or already in the base generation, and the
     * `_folded` manifest says which).
     */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+  def readIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexLayout.readLive(spark, dir)
 
-  /** [[writeIndex]] core over an explicit cluster-assignment column —
-    * the layout/IO path isolated from the quantizer, so scale probes can
-    * exercise 1000-partition-class index layouts without paying a
-    * 1000-centroid k-means.
+  /** Serve top-k from a [[writeIndex]] directory, in whatever form it
+    * was written: quantizer and codec model both read back from `dir`.
+    * The probed cluster ids are collected from the QUERY set (small by
+    * contract — it rides a broadcast) and pushed as a literal
+    * `cluster IN (...)` filter, so the parquet scan STATICALLY PRUNES to
+    * the probed partitions — serving I/O is (lists touched)/(corpus),
+    * not a full index scan; the spec asserts the pruning is in the plan.
     *
-    * The rows SHUFFLE onto their cluster before the partitioned write:
-    * without it every write task fans a file into every cluster dir it
-    * sees — ScaleProbe17 measured 32,768 files for a k=1024 index from
-    * 32 tasks (tasks x clusters), with the write at 57.9 s and every
-    * pruned serve paying a file listing/open tax (4.3 s/probe set) that
-    * grows with executor count. Cluster-aligned, each inverted list is
-    * one file (tasks carrying several clusters still cut one file per
-    * cluster): same index, 1,024 files, write 9.0 s, warm pruned serve
-    * 1.8 s. Lists that outgrow a sane file size split via
-    * `spark.sql.files.maxRecordsPerFile` — a size bound, not a
-    * task-count artifact.
-    */
-  /** Full-rebuild reset: a rebuild is a NEW index, so the generation
-    * pointer, old generations, batch areas, replay markers, AND the
-    * model subdirs all go — a stale `_opq`/`_pq_resid` dispatch bit
-    * from a previous layout would otherwise make self-describing
-    * appends encode to the WRONG code form against the new lists.
-    * (Contract: use a fresh stream checkpoint after a rebuild — an old
-    * checkpoint would re-deliver batches the new index never saw.)
-    */
-  private def resetIndexState(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    graft.sources.Generations.reset(
-      fsOf(spark, dir), dir,
-      Seq(AppendsDataSubdir, AppendsSubdir,
-        QuantizerSubdir, PqSubdir, PqResidSubdir, OpqSubdir))
-
-  private[graft] def writeIndexAssigned(
-      corpus: DataFrame, cluster: Column, dir: String,
-      metaCols: Seq[String] = Nil): Unit = {
-    resetIndexState(corpus.sparkSession, dir)
-    corpus.select(
-      Seq(col("vec_id"), graft.gfunctions.int8_codes(col("embedding")).as("codes_bin"),
-        cluster.cast("int").as("cluster")) ++ metaCols.map(col): _*)
-      .repartition(col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(dir)
-  }
-
-  /** Serve from a [[writeIndex]] directory. The probed cluster ids are
-    * collected from the QUERY set (small by contract — it rides a
-    * broadcast) and pushed as a literal `cluster IN (...)` filter, so
-    * the parquet scan STATICALLY PRUNES to the probed partitions —
-    * serving I/O is (lists touched)/(corpus), not a full index scan;
-    * the spec asserts the pruning is in the plan, not assumed. The
-    * per-query refinement is the same broadcast equi-join as
-    * [[topKInt8]], scored by the native integer kernel.
+    * `predicate` (over the persisted metadata columns) applies INSIDE the
+    * pruned scan — Parquet pushes it down (PushedFilters, spec-asserted)
+    * — and top-k ranks the SURVIVORS (post-filter semantics, the
+    * filtered-ANN contract). The recall caveat is about CORRELATION, not
+    * selectivity — measured (ScaleProbe19, 200k vectors): filters
+    * independent of embedding space thin every list uniformly and cost
+    * nothing (recall@10 = 1.000 at nprobe=2 down to 1/100 selectivity),
+    * while a filter aligned with cluster structure concentrates
+    * survivors in lists the query may not probe (recall 0.250 at
+    * nprobe=2 when the filter keeps exactly one cluster, restored to
+    * 1.000 at full probe). Raise nprobe for such predicates.
     *
     * NOTE: deriving the literal IN-list fires an EAGER Spark job at call
     * time (the price of static pruning — the filter must be a literal
     * before the plan is built). The probe frame is localCheckpoint'ed
-    * first so the query-banding subplan runs ONCE and the join reuses
-    * the materialized probes instead of recomputing them.
+    * first so the query-side subplan runs ONCE and the join reuses the
+    * materialized probes instead of recomputing them.
     */
   def searchIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       dir: String,
       queries: DataFrame,
-      centroids: Array[Array[Float]],
       k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.int8_codes
-    val probes = queries.select(
-      col("vec_id").as("query_id"), int8_codes(col("embedding")).as("qcodes"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-      .localCheckpoint(eager = true)
-    searchIndexProbed(spark, dir, probes, k)
-  }
+      nprobe: Int = 2,
+      predicate: Option[Column] = None): DataFrame =
+    serve(spark, dir, Codec.of(spark, dir), queries, k, nprobe, predicate)
 
-  /** Self-describing serve: probes against the quantizer persisted with
-    * the index (`dir/_quantizer`) — no caller-carried centroid state.
-    */
-  def searchIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame): DataFrame =
-    searchIndex(spark, dir, queries, readCentroids(spark, dir))
-
-  def searchIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int,
-      nprobe: Int): DataFrame =
-    searchIndex(spark, dir, queries, readCentroids(spark, dir), k, nprobe)
-
-  /** Attribute-FILTERED serve from a `writeIndex(..., metaCols)`
-    * directory: `predicate` (over the persisted metadata columns)
-    * applies INSIDE the statically pruned list scan — Parquet pushes it
-    * down (PushedFilters, spec-asserted), so a selective filter cuts
-    * list I/O before any scoring — and top-k ranks the SURVIVORS
-    * (post-filter semantics: k results that all satisfy the predicate,
-    * the filtered-ANN contract). The recall caveat is about
-    * CORRELATION, not selectivity — measured (ScaleProbe19, 200k
-    * vectors): filters independent of embedding space thin every list
-    * uniformly and cost nothing (recall@10 = 1.000 at nprobe=2 down to
-    * 1/100 selectivity), while a filter aligned with cluster structure
-    * concentrates survivors in lists the query may not probe (recall
-    * 0.250 at nprobe=2 when the filter keeps exactly one cluster —
-    * the probe-hit chance — restored to 1.000 at full probe). Raise
-    * nprobe for predicates that correlate with the vector space.
-    */
-  def searchIndexFiltered(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      predicate: Column,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.int8_codes
+  private def serve(
+      spark: SparkSession, dir: String, codec: Persisted, queries: DataFrame,
+      k: Int, nprobe: Int, predicate: Option[Column]): DataFrame = {
     val centroids = readCentroids(spark, dir)
-    val probes = queries.select(
-      col("vec_id").as("query_id"), int8_codes(col("embedding")).as("qcodes"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-      .localCheckpoint(eager = true)
-    searchIndexProbed(spark, dir, probes, k, Some(predicate))
+    val probed = probes(queries, centroids, nprobe, codec).localCheckpoint(eager = true)
+    val clusters = probed.select("cluster").distinct().collect().map(_.getInt(0))
+    val pruned = readIndex(spark, dir).filter(col("cluster").isin(clusters.toIndexedSeq: _*))
+    rank(predicate.fold(pruned)(pruned.filter), probed, k, codec, centroids)
   }
 
-  /** [[searchIndex]] core over an explicit (query_id, qcodes, cluster)
-    * probe frame (already materialized by the caller): literal IN-list
-    * from the probed clusters -> statically pruned index scan -> the
-    * broadcast refinement join, integer-kernel scored. The serving read
-    * path isolated from the quantizer for the same reason as
-    * [[writeIndexAssigned]].
+  /** Two-phase serve: [[searchIndex]] keeps k*oversample coarse
+    * candidates per query, then the exact float rerank
+    * ([[Similarity.exactRerank]]) re-scores just those against the float
+    * corpus via an equi-join on candidate id — a broadcast-driven point
+    * lookup, never a float-corpus scan. ScaleProbe16 measured the decay
+    * this exists to fix (pure int8 recall@10 0.62 on a 200k dense
+    * manifold, rerank 1.000). `oversample` defaults to the index's
+    * codec's (10 for int8, 20 for the PQ family). The rerank scores
+    * ORIGINAL vectors, so an OPQ index needs no rotation here.
     */
-  /** The shared serving scaffold for EVERY persisted layout: collect
-    * the probed cluster ids into a literal IN-filter (static partition
-    * pruning), apply the optional metadata predicate inside the pruned
-    * scan, equi-join the broadcast probes on cluster, score with the
-    * layout's `sim` expression (int8 kernel by default; the PQ-family
-    * cores pass their ADC forms), rank. One implementation so a fix to
-    * the prune/join/rank logic lands in all four layouts at once.
-    */
-  private[graft] def searchIndexProbed(
-      spark: org.apache.spark.sql.SparkSession,
+  def searchIndexRerank(
+      spark: SparkSession,
       dir: String,
-      probes: DataFrame,
-      k: Int,
-      predicate: Option[Column] = None,
-      sim: Column = graft.gfunctions.int8_cosine(col("c.codes_bin"), col("qcodes"))): DataFrame = {
-    val probedClusters = probes.select("cluster").distinct()
-      .collect().map(_.getInt(0))
-    val pruned = readIndex(spark, dir)
-      .filter(col("cluster").isin(probedClusters.toIndexedSeq: _*))
-    val listed = predicate.fold(pruned)(pruned.filter)
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"), sim.as("sim"))
-    Similarity.rankTopK(cand, k)
+      queries: DataFrame,
+      corpus: DataFrame,
+      k: Int = 10,
+      nprobe: Int = 2,
+      oversample: Option[Int] = None): DataFrame = {
+    val codec = Codec.of(spark, dir)
+    val coarse = serve(
+      spark, dir, codec, queries, k * oversample.getOrElse(codec.oversample), nprobe, None)
+    Similarity.exactRerank(coarse, queries, corpus, k)
   }
 
   /** APPEND a delta of new vectors to a persisted [[writeIndex]]
     * directory — the index lifecycle between rebuilds: a growing corpus
     * adds vectors far more often than the coarse quantizer needs
-    * retraining, so deltas assign at full precision against the SAME
-    * centroids the index was built with (the quantizer is versioned
-    * with the index; retraining means a rebuild). The batch lands as
-    * ONE atomically visible cluster-aligned directory under
-    * `_appends_data` — appends never modify the base generation, which
-    * is what makes a concurrent [[compactIndex]] unable to lose them
-    * (the [[graft.sources.Generations]] protocol; FencingSpec proves
+    * retraining, so deltas assign at full precision against the index's
+    * OWN persisted centroids (retraining means a rebuild), encode to the
+    * index's own form ([[Codec.of]]) and carry its metadata columns. The
+    * batch lands as ONE atomically visible cluster-aligned directory
+    * under `_appends_data` — appends never modify the base generation,
+    * which is what makes a concurrent [[compactIndex]] unable to lose
+    * them (the [[graft.sources.Generations]] protocol; FencingSpec proves
     * the interleaving). Serving needs no coordination: the next
     * [[readIndex]] resolution unions the committed batches in.
     *
     * Each append adds one directory of one-file-per-touched-cluster, so
     * the list read fragments over time — [[compactIndex]] is the
-    * maintenance pass that folds batches back into one file per list
-    * (the ScaleProbe17 layout cost is exactly what unbounded
-    * fragmentation re-creates).
-    *
-    * LEGACY GUARD: this explicit-centroid overload int8-encodes, so it
-    * refuses (IllegalArgumentException) an index whose lists carry PQ /
-    * residual / OPQ codes or metadata columns — a silently unioned
-    * foreign code column would leave appended rows null-coded under the
-    * serve path. Use the self-describing `appendIndex(delta, dir)`,
-    * which encodes to the index's own form.
+    * maintenance pass that folds batches back into one file per list.
     *
     * Concurrency contract: any number of appenders may run concurrently
     * with each other, with readers, and with ONE [[compactIndex]]; an
     * append may fail transiently during a compaction flip (stale model
     * read) and must be retried — it is never silently lost.
     */
-  def appendIndex(delta: DataFrame, centroids: Array[Array[Float]], dir: String): Unit = {
-    val spark = delta.sparkSession
-    val root = liveRoot(spark, dir)
-    val fs = fsOf(spark, dir)
-    Seq(PqSubdir, PqResidSubdir, OpqSubdir).foreach { sub =>
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/$sub")),
-        s"appendIndex(delta, centroids, dir): $dir carries a $sub model — its lists are " +
-          "not int8-coded. Use the self-describing appendIndex(delta, dir), which encodes " +
-          "to the index's own code form.")
-    }
-    val baseCols = spark.read.parquet(root).schema.fieldNames.toSet
-    require(baseCols == Set("vec_id", "codes_bin", "cluster"),
-      s"appendIndex(delta, centroids, dir): $dir carries metadata columns " +
-        s"(${baseCols.mkString(",")}) this overload would drop. Use appendIndex(delta, dir).")
-    landBatch(
-      delta.select(
-        col("vec_id"), graft.gfunctions.int8_codes(col("embedding")).as("codes_bin"),
-        clusterOf(col("embedding"), centroids).cast("int").as("cluster")),
-      dir, "adhoc-" + java.util.UUID.randomUUID.toString)
-  }
-
-  /** Self-describing append: assigns against the index's OWN persisted
-    * quantizer AND encodes to the index's own code form (rotated OPQ /
-    * residual / raw PQ if the matching model subdir is persisted, int8
-    * otherwise), carrying the index's metadata columns — the contract
-    * by construction. Same landing discipline and concurrency contract
-    * as the batch path: one atomic directory, compaction-safe.
-    */
   def appendIndex(delta: DataFrame, dir: String): Unit =
-    landBatch(encodeForIndex(delta, dir), dir,
-      "adhoc-" + java.util.UUID.randomUUID.toString)
+    landBatch(encodeForIndex(delta, dir), dir, "adhoc-" + java.util.UUID.randomUUID.toString)
 
   /** IDEMPOTENT append for exactly-once streaming ingest
     * ([[graft.streaming.Streams.indexAppendStream]]). Structured
@@ -521,53 +606,26 @@ object Ivf {
     * is ~100k markers/year — fold into a manifest file if the listing
     * ever matters).
     *
+    * `namespace` scopes the batch id to one STREAM LIFETIME: Spark
+    * numbers batches per checkpoint, so a stream re-pointed at this
+    * index with a FRESH checkpoint restarts at batchId 0 — without a
+    * namespace its genuinely new batches would be mistaken for replays
+    * and silently dropped. [[graft.streaming.Streams.indexAppendStream]]
+    * derives the namespace from the checkpoint path; direct callers own
+    * the one-checkpoint-per-namespace contract. `legacyIds` are commit
+    * records written under retired id forms, checked inside the same
+    * replay fence (and inside the lane's transient-retry envelope), so
+    * an upgrade replay of a pre-upgrade batch — marker present or
+    * crash-window landed-but-unmarked — stays a no-op instead of
+    * re-landing under the new namespace.
+    *
     * Concurrency contract: see [[appendIndex]] — concurrent with other
     * appenders, readers, and one compactor; transient failure during a
     * flip is retried by the streaming lane (same batchId, idempotent).
     */
-  def appendIndexBatch(delta: DataFrame, dir: String, batchId: Long): Unit =
-    appendIndexBatch(delta, dir, batchId, "")
-
-  /** [[appendIndexBatch]] with the batch id scoped to one STREAM
-    * LIFETIME: Spark numbers batches per checkpoint, so a stream
-    * re-pointed at this index with a FRESH checkpoint restarts at
-    * batchId 0 — without a namespace its genuinely new batches would
-    * be mistaken for replays and silently dropped.
-    * [[graft.streaming.Streams.indexAppendStream]] derives the
-    * namespace from the checkpoint path; direct callers own the
-    * one-checkpoint-per-namespace contract.
-    */
-  /** True iff an append batch with this fully-qualified id (namespace +
-    * batchId) has already committed against this index: marker present,
-    * OR landed-but-unmarked (the crash window between [[landBatch]]'s
-    * atomic visibility rename and the marker create — the same state
-    * [[appendIndexBatch]] self-heals for its OWN id). Both halves
-    * matter for a retired-namespace id
-    * ([[graft.streaming.Streams.legacyBatchNamespace]]): a replay that
-    * only checked the marker would re-land a crash-window batch under
-    * the NEW namespace and duplicate its rows.
-    */
-  def appendCommitted(
-      spark: org.apache.spark.sql.SparkSession, dir: String, id: String): Boolean =
-    // data-dir-first ordering lives in the shared layer — see
-    // [[graft.sources.IndexLayout.appendCommitted]] for why the reverse
-    // order opens a re-land window against a concurrent compaction
-    graft.sources.IndexLayout.appendCommitted(spark, dir, id)
-
   def appendIndexBatch(
-      delta: DataFrame, dir: String, batchId: Long, namespace: String): Unit =
-    appendIndexBatch(delta, dir, batchId, namespace, Nil)
-
-  /** [[appendIndexBatch]] that ALSO honors commit records written under
-    * retired id forms: `legacyIds` are checked inside the same replay
-    * fence (and inside the lane's transient-retry envelope), so an
-    * upgrade replay of a pre-upgrade batch — marker present or
-    * crash-window landed-but-unmarked — stays a no-op instead of
-    * re-landing under the new namespace.
-    */
-  def appendIndexBatch(
-      delta: DataFrame, dir: String, batchId: Long, namespace: String,
-      legacyIds: Seq[String]): Unit = {
+      delta: DataFrame, dir: String, batchId: Long, namespace: String = "",
+      legacyIds: Seq[String] = Nil): Unit = {
     val spark = delta.sparkSession
     val fs = fsOf(spark, dir)
     val id = s"$namespace$batchId"
@@ -580,6 +638,22 @@ object Ivf {
     landBatch(encodeForIndex(delta, dir), dir, id)
     graft.sources.IndexLayout.markBatch(fs, dir, id)
   }
+
+  /** True iff an append batch with this fully-qualified id (namespace +
+    * batchId) has already committed against this index: marker present,
+    * OR landed-but-unmarked (the crash window between [[landBatch]]'s
+    * atomic visibility rename and the marker create — the same state
+    * [[appendIndexBatch]] self-heals for its OWN id). Both halves
+    * matter for a retired-namespace id
+    * ([[graft.streaming.Streams.legacyBatchNamespace]]): a replay that
+    * only checked the marker would re-land a crash-window batch under
+    * the NEW namespace and duplicate its rows.
+    */
+  def appendCommitted(spark: SparkSession, dir: String, id: String): Boolean =
+    // data-dir-first ordering lives in the shared layer — see
+    // [[graft.sources.IndexLayout.appendCommitted]] for why the reverse
+    // order opens a re-land window against a concurrent compaction
+    graft.sources.IndexLayout.appendCommitted(spark, dir, id)
 
   /** Land an encoded batch as one atomically visible cluster-aligned
     * directory under `_appends_data` — the single write path every
@@ -612,65 +686,20 @@ object Ivf {
     */
   private val AppendsDataSubdir = graft.sources.IndexLayout.AppendsDataSubdir
 
-  /** Delta rows encoded to the index's OWN code form — rotated OPQ
-    * codes if the directory carries a persisted `_opq` model, residual
-    * PQ codes under `_pq_resid`, raw-vector PQ codes under `_pq`,
-    * packed int8 otherwise — with cluster assignment against the
-    * persisted quantizer. One ingest path serves all four index
-    * layouts, and an append can never mix code columns into a foreign
-    * index (the partitioned read would otherwise silently union the
-    * two schemas).
+  /** Delta rows as the index's own lists: assigned against the persisted
+    * quantizer and encoded to the persisted form, so an append can never
+    * mix code columns into a foreign index (the partitioned read would
+    * otherwise silently union the two schemas). The index's OWN schema
+    * defines the passthrough metadata contract: every non-code column
+    * the live lists have is carried, and a delta that lacks one fails
+    * LOUDLY (AnalysisException) instead of landing rows the filtered
+    * serve cannot see.
     */
   private def encodeForIndex(delta: DataFrame, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val spark = delta.sparkSession
-    val centroids = readCentroids(spark, dir)
-    val fs = fsOf(spark, dir)
-    val root = liveRoot(spark, dir)
-    val cluster = clusterOf(col("embedding"), centroids).cast("int").as("cluster")
-    // the index's OWN schema defines the passthrough metadata contract:
-    // a `writeIndex*(..., metaCols)` index carries filter columns in its
-    // lists, and an append that dropped them would leave appended rows
-    // invisible to (or failing under) the filtered serve — so carry
-    // every non-code column the live lists have, and fail LOUDLY
-    // (AnalysisException) if the delta lacks one
-    val codeCols = Set("vec_id", "cluster", "codes_bin", "codes_pq", "codes_pqr", "codes_opq")
-    val meta: Seq[Column] = spark.read.parquet(root).schema.fieldNames.toSeq
-      .filterNot(codeCols).map(col)
-    if (fs.exists(new Path(s"$root/$OpqSubdir"))) {
-      val model = readOpqModel(spark, dir)
-      delta.select(
-        Seq(
-          col("vec_id"),
-          graft.gfunctions.pq_codes(
-            graft.gfunctions.mat_vec(col("embedding"), model.rotation, model.dims),
-            model.pq.codebook, model.pq.m, model.pq.ksub).as("codes_opq"),
-          cluster) ++ meta: _*)
-    } else if (fs.exists(new Path(s"$root/$PqResidSubdir"))) {
-      val model = readPqModel(spark, dir, PqResidSubdir)
-      val flat = centroids.flatten
-      delta.select(Seq(col("vec_id"), col("embedding"), cluster) ++ meta: _*)
-        .select(
-          Seq(
-            col("vec_id"),
-            graft.gfunctions.pq_resid_codes(
-              col("embedding"), col("cluster"), flat, model.codebook, model.m, model.ksub)
-              .as("codes_pqr"),
-            col("cluster")) ++ meta: _*)
-    } else if (fs.exists(new Path(s"$root/$PqSubdir"))) {
-      val model = readPqModel(spark, dir)
-      delta.select(
-        Seq(
-          col("vec_id"),
-          graft.gfunctions.pq_codes(col("embedding"), model.codebook, model.m, model.ksub)
-            .as("codes_pq"),
-          cluster) ++ meta: _*)
-    } else {
-      delta.select(
-        Seq(
-          col("vec_id"), graft.gfunctions.int8_codes(col("embedding")).as("codes_bin"),
-          cluster) ++ meta: _*)
-    }
+    val meta = spark.read.parquet(liveRoot(spark, dir)).schema.fieldNames.toSeq
+      .filterNot(Codec.codeColumns ++ Set("vec_id", "cluster"))
+    listed(delta, readCentroids(spark, dir), Codec.of(spark, dir), meta)
   }
 
   /** Fold an appended-to index back to one file per inverted list, via
@@ -696,7 +725,7 @@ object Ivf {
     * (`_complete` is last); a mid-flip crash resolves to the completed
     * generation; all residue is swept on the next run's entry GC.
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+  def compactIndex(spark: SparkSession, dir: String): Unit =
     compactIndexHooked(spark, dir, () => ())
 
   /** [[compactIndex]] with a test seam: `afterSnapshot` runs between
@@ -705,12 +734,10 @@ object Ivf {
     * concurrent appends.
     */
   private[graft] def compactIndexHooked(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      afterSnapshot: () => Unit): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
+      spark: SparkSession, dir: String, afterSnapshot: () => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, dir)
-    val models = Seq(QuantizerSubdir, PqSubdir, PqResidSubdir, OpqSubdir)
+    val models = Codec.modelSubdirs
     // The protocol (entry GC, fold snapshot fence, marker-before-
     // complete ordering, post-flip GC, the r13-era .old heal) lives in
     // the shared layer — [[graft.sources.IndexLayout.compact]]. What is
@@ -731,81 +758,7 @@ object Ivf {
       afterSnapshot = afterSnapshot)
   }
 
-  /** Two-phase serving from a persisted index — [[searchIndex]] composed
-    * with the exact-float rerank of
-    * [[Similarity.int8RerankTopK]]: the coarse pass scores PACKED codes
-    * over the statically pruned partitions and keeps k*oversample
-    * candidates per query; the rerank re-scores just those candidates
-    * with the exact float kernel via an equi-join on candidate id
-    * against the float corpus. ScaleProbe16 measured the decay this
-    * exists to fix (pure int8 recall@10 0.62 on a 200k dense manifold,
-    * rerank 1.000) — the persisted index is the serving shape, so it
-    * inherits the decay exactly and needs the fix most.
-    *
-    * At 100 TB: the index scan touches nprobe lists of 1-byte/dim codes;
-    * the float corpus is touched for k*oversample rows per query — a
-    * broadcast-driven point-lookup, never a float-corpus scan.
-    */
-  def searchIndexRerank(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      corpus: DataFrame,
-      centroids: Array[Array[Float]],
-      k: Int = 10,
-      nprobe: Int = 2,
-      oversample: Int = 10): DataFrame =
-    Similarity.exactRerank(
-      searchIndex(spark, dir, queries, centroids, k * oversample, nprobe), queries, corpus, k)
-
-  /** Self-describing two-phase serve — the persisted quantizer edition
-    * of [[searchIndexRerank]].
-    */
-  def searchIndexRerank(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      corpus: DataFrame): DataFrame =
-    searchIndexRerank(spark, dir, queries, corpus, readCentroids(spark, dir))
-
-  // ------------------------------------------------------------- IVF-PQ
-
-  /** IVF-PQ: compute pruning (nprobe lists per query) x the DEEPEST
-    * memory pruning (m-byte PQ codes in the lists instead of the int8
-    * path's dims bytes — 8 B vs 64 B at the defaults). List assignment
-    * stays full-precision like [[topKInt8]]; scoring inside probed lists
-    * is ADC — the per-query LUT rides the broadcast probe side, each
-    * candidate costs m table lookups. At full probe the candidate set is
-    * the whole corpus, so results equal [[Pq.topKPq]] row for row (the
-    * parity spec).
-    */
-  def topKPq(
-      corpus: DataFrame,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      model: Pq.Model,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.{pq_adc_sim, pq_codes, pq_lut}
-    val listed = corpus.select(
-      col("vec_id"), pq_codes(col("embedding"), model.codebook, model.m, model.ksub).as("codes_pq"),
-      clusterOf(col("embedding"), centroids).as("cluster"))
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_lut(col("embedding"), model.codebook, model.m, model.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(
-        col("query_id"), col("c.vec_id").as("neighbor_id"),
-        pq_adc_sim(col("c.codes_pq"), col("qlut"), model.codebook, model.m, model.ksub).as("sim"))
-    Similarity.rankTopK(cand, k)
-  }
-
-  // -------------------------------------------------- residual IVF-PQ
+  // ------------------------------------------------- residual PQ training
 
   /** Driver-side cosine assignment matching [[clusterOf]]'s rule (sim
     * desc, lower cluster id on ties) — training-time residuals must
@@ -835,13 +788,12 @@ object Ivf {
     best
   }
 
-  /** Train a RESIDUAL PQ codebook against a coarse quantizer — the
-    * textbook IVFPQ refinement: the residuals vec - centroid[cluster]
-    * of a decent quantizer are smaller-magnitude and better-centered
-    * than raw vectors, so the same m bytes buy finer cells. Same
-    * bounded-sample / driver-local discipline as [[Pq.train]]; the
-    * sample assigns with the engine's own cosine rule so training sees
-    * the distribution encoding will see.
+  /** Train the [[Codec.PqResid]] codebook against a coarse quantizer:
+    * the residuals vec - centroid[cluster] of a decent quantizer are
+    * smaller-magnitude and better-centered than raw vectors, so the same
+    * m bytes buy finer cells. Same bounded-sample, fit-on-the-collected-sample
+    * discipline as [[Pq.train]]; the sample assigns with the engine's own
+    * cosine rule so training sees the distribution encoding will see.
     */
   def trainResidualPq(
       emb: DataFrame, centroids: Array[Array[Float]],
@@ -856,482 +808,4 @@ object Ivf {
     }
     Pq.trainOnVectors(residuals, m, ksub, dims, iters)
   }
-
-  /** Residual IVF-PQ search: lists carry m-byte RESIDUAL codes; scoring
-    * is exact cosine over centroid + residual reconstruction via
-    * cluster-conditioned tables ([[graft.gfunctions.pq_resid_sim]] —
-    * the cross terms dot(centroid_j, residCentroid_e) are plan-time
-    * constants, so a candidate still costs table lookups). Same probe /
-    * equi-join / rank shape as [[topKPq]]; at full probe this ranks by
-    * the exact reconstruction cosine of the residual model (the parity
-    * and recall specs quantify what the residual refinement buys over
-    * raw-vector PQ at the same byte budget).
-    */
-  def topKPqResidual(
-      corpus: DataFrame,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      model: Pq.Model,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.{pq_resid_codes, pq_resid_lut, pq_resid_sim}
-    val flat = centroids.flatten
-    val assigned = corpus.select(
-      col("vec_id"), col("embedding"),
-      clusterOf(col("embedding"), centroids).cast("int").as("cluster"))
-    val listed = assigned.select(
-      col("vec_id"), col("cluster"),
-      pq_resid_codes(col("embedding"), col("cluster"), flat, model.codebook, model.m, model.ksub)
-        .as("codes_pqr"))
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_resid_lut(col("embedding"), flat, model.codebook, model.m, model.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(
-        col("query_id"), col("c.vec_id").as("neighbor_id"),
-        pq_resid_sim(
-          col("c.codes_pqr"), col("qlut"), col("c.cluster"),
-          flat, model.codebook, model.m, model.ksub).as("sim"))
-    Similarity.rankTopK(cand, k)
-  }
-
-  /** The PQ codebook is versioned with the index like the coarse
-    * quantizer: persisted under `dir/_pq` (underscore-hidden from the
-    * list scan), one row per codebook entry plus the (m, ksub) shape.
-    */
-  private val PqSubdir = "_pq"
-
-  /** The residual codebook versions under a DISTINCT subdir from `_pq`
-    * because the code meaning differs: `codes_pq` index the raw-vector
-    * codebook, `codes_pqr` index the residual codebook against the
-    * persisted quantizer. The subdir that exists IS the dispatch bit
-    * for self-describing serve and append ([[encodeForIndex]]).
-    */
-  private val PqResidSubdir = "_pq_resid"
-
-  private def writePqModel(
-      spark: org.apache.spark.sql.SparkSession, model: Pq.Model, dir: String,
-      subdir: String = PqSubdir): Unit = {
-    import spark.implicits._
-    val dsub = model.dsub
-    (0 until model.m * model.ksub)
-      .map(e => (model.m, model.ksub, e,
-        (0 until dsub).map(i => model.codebook(e * dsub + i))))
-      .toDF("m", "ksub", "entry", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/$subdir")
-  }
-
-  def readPqModel(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      subdir: String = PqSubdir): Pq.Model = {
-    val rows = spark.read.parquet(s"${liveRoot(spark, dir)}/$subdir").orderBy("entry").collect()
-    val m = rows.head.getInt(0)
-    val ksub = rows.head.getInt(1)
-    val codebook = rows.flatMap(_.getSeq[Float](3)).toArray
-    Pq.Model(codebook, m, ksub)
-  }
-
-  /** Read the RESIDUAL codebook persisted with a [[writeIndexPqResid]]
-    * index (specs use this for the round-trip pin).
-    */
-  def readPqResidModel(spark: org.apache.spark.sql.SparkSession, dir: String): Pq.Model =
-    readPqModel(spark, dir, PqResidSubdir)
-
-  /** The OPQ model versions under `dir/_opq`: the rotation at
-    * `_opq/rotation` (one row per matrix row) and the ROTATED-space PQ
-    * codebook at `_opq/pq` (the `_pq` row shape). Like `_pq` /
-    * `_pq_resid`, the subdir that exists is the dispatch bit for
-    * self-describing serve and append.
-    */
-  private val OpqSubdir = "_opq"
-
-  private def writeOpqModel(
-      spark: org.apache.spark.sql.SparkSession, model: Opq.Model, dir: String): Unit = {
-    import spark.implicits._
-    val d = model.dims
-    (0 until d)
-      .map(i => (d, i, (0 until d).map(j => model.rotation(i * d + j))))
-      .toDF("dims", "row", "values")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/$OpqSubdir/rotation")
-    writePqModel(spark, model.pq, dir, s"$OpqSubdir/pq")
-  }
-
-  /** Read the OPQ model persisted with a [[writeIndexOpq]] index. */
-  def readOpqModel(spark: org.apache.spark.sql.SparkSession, dir: String): Opq.Model = {
-    val rows = spark.read.parquet(s"${liveRoot(spark, dir)}/$OpqSubdir/rotation")
-      .orderBy("row").collect()
-    val rotation = rows.flatMap(_.getSeq[Float](2)).toArray
-    Opq.Model(rotation, readPqModel(spark, dir, s"$OpqSubdir/pq"))
-  }
-
-  /** Persist an IVF-PQ index: inverted lists of (vec_id, m-byte codes_pq)
-    * partitioned by cluster, cluster-aligned like [[writeIndexAssigned]]
-    * (one file per list); both models — the coarse quantizer AND the PQ
-    * codebook — ride under `dir/_quantizer` / `dir/_pq`, so serving is
-    * fully self-describing. This is the index shape where a 100 TB
-    * corpus's lists are m bytes per vector: 8 B at the defaults, 8x
-    * below the int8 index, 32x below float32.
-    */
-  def writeIndexPq(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Pq.Model,
-      dir: String): Unit =
-    writeIndexPq(corpus, centroids, model, dir, Nil)
-
-  /** [[writeIndexPq]] carrying passthrough METADATA columns into the
-    * m-byte lists — the same filtered-ANN trade as the int8
-    * `writeIndex(..., metaCols)`: filter state lives IN the index so
-    * the pruned scan pushes it down, at the cost of riding every list
-    * row. With 8-byte codes the metadata is often LARGER than the
-    * vector payload — keep it to the few small columns serving
-    * actually filters by.
-    */
-  def writeIndexPq(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Pq.Model,
-      dir: String, metaCols: Seq[String]): Unit = {
-    import graft.gfunctions.pq_codes
-    resetIndexState(corpus.sparkSession, dir)
-    corpus.select(
-      Seq(
-        col("vec_id"),
-        pq_codes(col("embedding"), model.codebook, model.m, model.ksub).as("codes_pq"),
-        clusterOf(col("embedding"), centroids).cast("int").as("cluster")) ++
-        metaCols.map(col): _*)
-      .repartition(col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(dir)
-    writeCentroids(corpus.sparkSession, centroids, dir)
-    writePqModel(corpus.sparkSession, model, dir)
-  }
-
-  /** Serve ADC top-k from a [[writeIndexPq]] directory: probed cluster
-    * ids push as a literal IN-filter (static partition pruning, same as
-    * [[searchIndex]]); candidates inside the pruned lists score via the
-    * per-query LUT riding the broadcast probe frame. Self-describing:
-    * both models read back from the index directory.
-    */
-  def searchIndexPq(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexPqCore(spark, dir, queries, k, nprobe, None)
-
-  /** Attribute-FILTERED ADC serve from a `writeIndexPq(..., metaCols)`
-    * directory — the PQ edition of [[searchIndexFiltered]]: the
-    * predicate applies INSIDE the statically pruned m-byte list scan
-    * (Parquet pushdown, spec-asserted) and top-k ranks the survivors
-    * (post-filter semantics). The ScaleProbe19 correlation caveat
-    * applies unchanged — it is a property of list pruning, not of the
-    * code form.
-    */
-  def searchIndexPqFiltered(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      predicate: Column,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexPqCore(spark, dir, queries, k, nprobe, Some(predicate))
-
-  private def searchIndexPqCore(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int,
-      nprobe: Int,
-      predicate: Option[Column]): DataFrame = {
-    import graft.gfunctions.{pq_adc_sim, pq_lut}
-    val centroids = readCentroids(spark, dir)
-    val model = readPqModel(spark, dir)
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_lut(col("embedding"), model.codebook, model.m, model.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-      .localCheckpoint(eager = true)
-    searchIndexProbed(spark, dir, probes, k, predicate,
-      sim = pq_adc_sim(col("c.codes_pq"), col("qlut"), model.codebook, model.m, model.ksub))
-  }
-
-  /** Two-phase IVF-PQ serving — the deepest-compression edition of
-    * [[searchIndexRerank]]: coarse ADC over the pruned m-byte lists
-    * keeps k*oversample, exact float rerank via broadcast candidate-id
-    * join. Oversample default is the PQ rerank's 20x (coarser cells
-    * than int8 — see [[Pq.pqRerankTopK]]).
-    */
-  def searchIndexPqRerank(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2,
-      oversample: Int = 20): DataFrame =
-    Similarity.exactRerank(
-      searchIndexPq(spark, dir, queries, k * oversample, nprobe), queries, corpus, k)
-
-  // ------------------------------------ persisted RESIDUAL IVF-PQ index
-
-  /** Persist a residual IVF-PQ index: inverted lists of (vec_id, m-byte
-    * codes_pqr) partitioned by cluster, cluster-aligned (one file per
-    * list), with the coarse quantizer under `dir/_quantizer` and the
-    * RESIDUAL codebook under `dir/_pq_resid` — the subdir name is the
-    * self-describing dispatch bit ([[encodeForIndex]] appends encode
-    * residually, [[searchIndexPqResid]] scores residually). Same 8 B/
-    * vector hot size as [[writeIndexPq]]; the residual refinement buys
-    * recall at that byte budget (PqSpec measures it on the gate set),
-    * and it is the DEFAULT 8-byte rung: in the ladder probe
-    * (ScaleProbe24, dense 200k corpus, rerank@100x) the residual index
-    * recovers recall@10 = 1.000 where raw PQ and OPQ leave 0.981.
-    */
-  def writeIndexPqResid(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Pq.Model,
-      dir: String): Unit =
-    writeIndexPqResid(corpus, centroids, model, dir, Nil)
-
-  /** [[writeIndexPqResid]] carrying passthrough METADATA columns into
-    * the lists — same filtered-serving trade as `writeIndexPq(...,
-    * metaCols)`.
-    */
-  def writeIndexPqResid(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Pq.Model,
-      dir: String, metaCols: Seq[String]): Unit = {
-    import graft.gfunctions.pq_resid_codes
-    resetIndexState(corpus.sparkSession, dir)
-    val flat = centroids.flatten
-    corpus
-      .select(
-        Seq(col("vec_id"), col("embedding"),
-          clusterOf(col("embedding"), centroids).cast("int").as("cluster")) ++
-          metaCols.map(col): _*)
-      .select(
-        Seq(
-          col("vec_id"),
-          pq_resid_codes(
-            col("embedding"), col("cluster"), flat, model.codebook, model.m, model.ksub)
-            .as("codes_pqr"),
-          col("cluster")) ++ metaCols.map(col): _*)
-      .repartition(col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(dir)
-    writeCentroids(corpus.sparkSession, centroids, dir)
-    writePqModel(corpus.sparkSession, model, dir, PqResidSubdir)
-  }
-
-  /** Serve residual-ADC top-k from a [[writeIndexPqResid]] directory:
-    * probed cluster ids push as a literal IN-filter (static partition
-    * pruning); candidates inside the pruned lists score by the EXACT
-    * reconstruction cosine via cluster-conditioned tables — the
-    * partition column itself feeds [[graft.gfunctions.pq_resid_sim]],
-    * so the list rows stay m bytes with no extra state. Self-
-    * describing: both models read back from the index directory.
-    */
-  def searchIndexPqResid(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexPqResidCore(spark, dir, queries, k, nprobe, None)
-
-  /** Attribute-FILTERED residual serve — predicate applies inside the
-    * statically pruned scan (Parquet pushdown), post-filter top-k. The
-    * ScaleProbe19 correlation caveat applies unchanged.
-    */
-  def searchIndexPqResidFiltered(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      predicate: Column,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexPqResidCore(spark, dir, queries, k, nprobe, Some(predicate))
-
-  private def searchIndexPqResidCore(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int,
-      nprobe: Int,
-      predicate: Option[Column]): DataFrame = {
-    import graft.gfunctions.{pq_resid_lut, pq_resid_sim}
-    val centroids = readCentroids(spark, dir)
-    val flat = centroids.flatten
-    val model = readPqModel(spark, dir, PqResidSubdir)
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_resid_lut(col("embedding"), flat, model.codebook, model.m, model.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-      .localCheckpoint(eager = true)
-    searchIndexProbed(spark, dir, probes, k, predicate,
-      sim = pq_resid_sim(
-        col("c.codes_pqr"), col("qlut"), col("c.cluster").cast("int"),
-        flat, model.codebook, model.m, model.ksub))
-  }
-
-  /** Two-phase residual IVF-PQ serving: coarse residual-ADC over the
-    * pruned m-byte lists keeps k*oversample, exact float rerank via
-    * broadcast candidate-id join. Oversample default matches
-    * [[searchIndexPqRerank]]'s 20x (same cell coarseness class).
-    */
-  def searchIndexPqResidRerank(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2,
-      oversample: Int = 20): DataFrame =
-    Similarity.exactRerank(
-      searchIndexPqResid(spark, dir, queries, k * oversample, nprobe), queries, corpus, k)
-
-  // ---------------------------------------- persisted OPQ (IVF-OPQ) index
-
-  /** In-memory IVF-OPQ: [[topKPq]] with the rotation fused into both
-    * projections. Cluster assignment stays in the RAW space (orthogonal
-    * rotations preserve cosine, so raw-space and rotated-space k-means
-    * partitions are metrically equivalent — keeping assignment raw means
-    * the same coarse quantizer serves every code form in the ladder);
-    * codes and the query LUT live in the ROTATED space where the cells
-    * fit better.
-    */
-  def topKOpq(
-      corpus: DataFrame,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      model: Opq.Model,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    import graft.gfunctions.{mat_vec, pq_adc_sim, pq_codes, pq_lut}
-    val listed = corpus.select(
-      col("vec_id"),
-      pq_codes(
-        mat_vec(col("embedding"), model.rotation, model.dims),
-        model.pq.codebook, model.pq.m, model.pq.ksub).as("codes_opq"),
-      clusterOf(col("embedding"), centroids).as("cluster"))
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_lut(
-        mat_vec(col("embedding"), model.rotation, model.dims),
-        model.pq.codebook, model.pq.m, model.pq.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-    val cand = listed.alias("c")
-      .join(broadcast(probes.alias("q")),
-        col("c.cluster") === col("q.cluster") && col("query_id") =!= col("c.vec_id"))
-      .select(
-        col("query_id"), col("c.vec_id").as("neighbor_id"),
-        pq_adc_sim(col("c.codes_opq"), col("qlut"), model.pq.codebook, model.pq.m, model.pq.ksub)
-          .as("sim"))
-    Similarity.rankTopK(cand, k)
-  }
-
-  /** Persist an IVF-OPQ index: inverted lists of (vec_id, m-byte
-    * codes_opq) cluster-aligned, the raw-space coarse quantizer under
-    * `_quantizer` and the OPQ model (rotation + rotated-space codebook)
-    * under `_opq` — the dispatch bit, so [[encodeForIndex]] appends
-    * rotate-and-encode with zero new ingest code. Same 8 B/vector hot
-    * size as the other PQ indexes; the rotation buys quantization error
-    * (OpqSpec: 82.8% of plain PQ's on real embeddings).
-    */
-  def writeIndexOpq(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Opq.Model,
-      dir: String): Unit =
-    writeIndexOpq(corpus, centroids, model, dir, Nil)
-
-  /** [[writeIndexOpq]] carrying passthrough METADATA columns — the
-    * filtered-serving trade of `writeIndexPq(..., metaCols)`.
-    */
-  def writeIndexOpq(
-      corpus: DataFrame, centroids: Array[Array[Float]], model: Opq.Model,
-      dir: String, metaCols: Seq[String]): Unit = {
-    import graft.gfunctions.{mat_vec, pq_codes}
-    resetIndexState(corpus.sparkSession, dir)
-    corpus.select(
-      Seq(
-        col("vec_id"),
-        pq_codes(
-          mat_vec(col("embedding"), model.rotation, model.dims),
-          model.pq.codebook, model.pq.m, model.pq.ksub).as("codes_opq"),
-        clusterOf(col("embedding"), centroids).cast("int").as("cluster")) ++
-        metaCols.map(col): _*)
-      .repartition(col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(dir)
-    writeCentroids(corpus.sparkSession, centroids, dir)
-    writeOpqModel(corpus.sparkSession, model, dir)
-  }
-
-  /** Serve rotated-ADC top-k from a [[writeIndexOpq]] directory: probed
-    * cluster ids (raw-space assignment) push as a literal IN-filter;
-    * candidates score against the ROTATED query LUT. Self-describing.
-    */
-  def searchIndexOpq(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexOpqCore(spark, dir, queries, k, nprobe, None)
-
-  /** Attribute-FILTERED OPQ serve — pushed predicates inside the pruned
-    * scan, post-filter top-k; the ScaleProbe19 correlation caveat
-    * applies unchanged.
-    */
-  def searchIndexOpqFiltered(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      predicate: Column,
-      k: Int = 10,
-      nprobe: Int = 2): DataFrame =
-    searchIndexOpqCore(spark, dir, queries, k, nprobe, Some(predicate))
-
-  private def searchIndexOpqCore(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      k: Int,
-      nprobe: Int,
-      predicate: Option[Column]): DataFrame = {
-    import graft.gfunctions.{mat_vec, pq_adc_sim, pq_lut}
-    val centroids = readCentroids(spark, dir)
-    val model = readOpqModel(spark, dir)
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      pq_lut(
-        mat_vec(col("embedding"), model.rotation, model.dims),
-        model.pq.codebook, model.pq.m, model.pq.ksub).as("qlut"),
-      explode(transform(
-        slice(nearestClusters(col("embedding"), centroids), 1, nprobe),
-        s => -s.getField("neg_id"))).as("cluster"))
-      .localCheckpoint(eager = true)
-    searchIndexProbed(spark, dir, probes, k, predicate,
-      sim = pq_adc_sim(
-        col("c.codes_opq"), col("qlut"), model.pq.codebook, model.pq.m, model.pq.ksub))
-  }
-
-  /** Two-phase OPQ serving: coarse rotated-ADC over the pruned lists
-    * keeps k*oversample, exact float rerank on ORIGINAL vectors (the
-    * invariance means the exact phase needs no rotation).
-    */
-  def searchIndexOpqRerank(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int = 10,
-      nprobe: Int = 2,
-      oversample: Int = 20): DataFrame =
-    Similarity.exactRerank(
-      searchIndexOpq(spark, dir, queries, k * oversample, nprobe), queries, corpus, k)
 }

@@ -159,7 +159,7 @@ object Pq {
     * NOTE this in-memory path pays the ENCODE of the float corpus
     * inline (argmin over m*ksub centroids per vector — measured ~10x
     * the scoring cost); encode once and use [[topKPqCoded]], or better
-    * the persisted [[Ivf.writeIndexPq]] lists, when the corpus is
+    * the persisted [[Ivf.Codec.Pq]] lists of [[Ivf.writeIndex]], when the corpus is
     * reused across query batches.
     */
   def topKPq(

@@ -492,7 +492,7 @@ object Similarity {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val centroids = cachedCentroids(d, emb)
-      Ivf.topKInt8(emb, querySet(emb), centroids)
+      Ivf.topK(emb, querySet(emb), centroids, codec = Ivf.Codec.Int8)
     },
     None,
   )
@@ -518,7 +518,7 @@ object Similarity {
         Ivf.writeIndex(emb, centroids, out)
         out
       })
-      Ivf.searchIndexRerank(s, dir, querySet(emb), emb, centroids)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb)
     },
     None,
   )
@@ -569,7 +569,7 @@ object Similarity {
         out
       })
       Ivf.searchIndexRerank(
-        s, dir, querySet(emb), emb, centroids, k = 10, nprobe = 8, oversample = 50)
+        s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = Some(50))
     },
     Some(bruteOracleSql),
   )
@@ -622,7 +622,7 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
       val centroids = cachedCentroids(d, emb)
       val model = pqResidModelCache.getOrElseUpdate(d, Ivf.trainResidualPq(emb, centroids))
-      Ivf.topKPqResidual(emb, querySet(emb), centroids, model)
+      Ivf.topK(emb, querySet(emb), centroids, codec = Ivf.Codec.PqResid(model))
     },
     None,
   )
@@ -645,10 +645,10 @@ object Similarity {
       val model = pqModel(d, emb)
       val dir = pqIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/pq_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexPq(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.Pq(model))
         out
       })
-      Ivf.searchIndexPqRerank(s, dir, querySet(emb), emb)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb)
     },
     None,
   )
@@ -692,10 +692,10 @@ object Similarity {
       val model = pqResidModelCache.getOrElseUpdate(d, Ivf.trainResidualPq(emb, centroids))
       val dir = pqResidIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/pqr_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexPqResid(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.PqResid(model))
         out
       })
-      Ivf.searchIndexPqResidRerank(s, dir, querySet(emb), emb)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb)
     },
     None,
   )
@@ -715,10 +715,10 @@ object Similarity {
       val model = pqModel(d, emb)
       val dir = pqIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/pq_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexPq(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.Pq(model))
         out
       })
-      Ivf.searchIndexPqRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = 100)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = Some(100))
     },
     Some(bruteOracleSql),
   )
@@ -735,10 +735,10 @@ object Similarity {
       val model = pqResidModelCache.getOrElseUpdate(d, Ivf.trainResidualPq(emb, centroids))
       val dir = pqResidIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/pqr_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexPqResid(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.PqResid(model))
         out
       })
-      Ivf.searchIndexPqResidRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = 100)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = Some(100))
     },
     Some(bruteOracleSql),
   )
@@ -754,10 +754,10 @@ object Similarity {
       val model = opqModelCache.getOrElseUpdate(d, Opq.train(emb))
       val dir = opqIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/opq_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexOpq(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.Opq(model))
         out
       })
-      Ivf.searchIndexOpqRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = 100)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb, k = 10, nprobe = 8, oversample = Some(100))
     },
     Some(bruteOracleSql),
   )
@@ -780,10 +780,10 @@ object Similarity {
       val model = opqModelCache.getOrElseUpdate(d, Opq.train(emb))
       val dir = opqIndexDirCache.getOrElseUpdate(d, {
         val out = s"/tmp/graft-index/opq_${java.lang.Integer.toHexString(d.hashCode)}"
-        Ivf.writeIndexOpq(emb, centroids, model, out)
+        Ivf.writeIndex(emb, centroids, out, codec = Ivf.Codec.Opq(model))
         out
       })
-      Ivf.searchIndexOpqRerank(s, dir, querySet(emb), emb)
+      Ivf.searchIndexRerank(s, dir, querySet(emb), emb)
     },
     None,
   )
@@ -1396,9 +1396,8 @@ object Similarity {
     val qr = denseQuerySet(emb, queries)
     val qFloat = qr.select(col("query_id").as("vec_id"),
       array((0 until dims).map(j => col(s"q$j").cast("float")): _*).as("embedding"))
-    val centroids = Ivf.readCentroids(s, dir)
     val cands = Ivf.searchIndex(
-      s, dir, qFloat, centroids, k = DenseGateCandidates, nprobe = centroids.length)
+      s, dir, qFloat, k = DenseGateCandidates, nprobe = Ivf.readCentroids(s, dir).length)
     val scored = cands.select("query_id", "neighbor_id")
       .join(emb.withColumnRenamed("doc_id", "neighbor_id"), Seq("neighbor_id"))
       .join(broadcast(qr), Seq("query_id"))

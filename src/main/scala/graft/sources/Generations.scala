@@ -131,7 +131,7 @@ object Generations {
 
   /** Reset every trace of the protocol under `dir` — pointer,
     * generations, and the given batch areas. Called by FULL REBUILD
-    * writers (`Ivf.writeIndex*`, `Clustered.save`) before their
+    * writers (`Ivf.writeIndex`, `Clustered.save`) before their
     * overwrite: a rebuild is a NEW table, and without the reset a
     * stale `_current` would keep resolving readers into a dead
     * generation beside the fresh flat data. (Markers under `_appends`

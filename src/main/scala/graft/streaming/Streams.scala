@@ -303,8 +303,11 @@ object Streams {
     *
     * Concurrency contract: ONE producer per reference directory (the
     * overwrite is not arbitrated between producers); safe concurrent
-    * with any number of stream readers — a reader that races the swap
-    * sees the old or the new reference in full, and the next
+    * with any number of stream readers. The parquet overwrite is NOT
+    * atomic against a reader's file listing — a reader that races the
+    * swap can list files that vanish before its scan — so the
+    * refreshing lanes re-read the reference inside their
+    * transient-retry envelope ([[refreshingLane]]), and the next
     * micro-batch re-lists (the SURVEY §4 contract table).
     */
   def writeNearDupRef(
@@ -373,12 +376,30 @@ object Streams {
       k: Int = 16,
       bands: Int = 4,
       tau: Double = 0.5,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
+      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    refreshingLane(docs, sink, checkpoint) { batch =>
+      nearDupMatch(batch, batch.sparkSession.read.parquet(refSigDir), k, bands, tau)
+    }
+
+  /** The one scaffold under every REFRESHABLE lane: per micro-batch,
+    * `matchBatch` re-reads the lane's reference directory and its rows
+    * go to `sink`, both inside the ingest lanes' transient-retry
+    * envelope ([[retryTransient]]). The reference producers rewrite
+    * their directory with a parquet overwrite, which is not atomic
+    * against a reader's file listing: a micro-batch racing the swap can
+    * list files that vanish before its (lazy) scan runs in the sink's
+    * action, and the retry re-reads the reference instead of
+    * terminating the query. A retried batch re-emits its rows, which
+    * every lane's sink contract (upsert by key, the q27 discipline)
+    * already absorbs.
+    */
+  private def refreshingLane(
+      arrivals: DataFrame, sink: (DataFrame, Long) => Unit, checkpoint: Option[String])(
+      matchBatch: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = arrivals.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ref = batch.sparkSession.read.parquet(refSigDir)
-        sink(nearDupMatch(batch.toDF(), ref, k, bands, tau), batchId)
+        retryTransient(5)(sink(matchBatch(batch.toDF()), batchId))
       }
     checkpoint.foreach(c => w.option("checkpointLocation", c))
     w.start()
@@ -391,10 +412,8 @@ object Streams {
     * the periodic batch run recomputes it over the current curated
     * corpus and overwrites; the running stream picks the swap up on its
     * next micro-batch. One producer per directory, any number of
-    * stream readers — and because the parquet overwrite is NOT atomic
-    * against a reader's listing, the consumer wraps its read in the
-    * ingest lanes' transient-retry envelope rather than trusting an
-    * old-or-new-in-full illusion.
+    * stream readers ([[writeNearDupRef]]'s contract: the consumer
+    * re-reads inside the transient-retry envelope).
     */
   def writeLineRepairRef(
       corpus: DataFrame, dir: String,
@@ -432,22 +451,10 @@ object Streams {
       docs: DataFrame,
       refDir: String,
       sink: (DataFrame, Long) => Unit,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // the producer's overwrite is not atomic against this listing —
-        // a micro-batch racing the swap can see a vanishing directory;
-        // the retry envelope (the ingest lanes' convention) absorbs the
-        // window instead of terminating the query
-        retryTransient(5) {
-          val removal = batch.sparkSession.read.parquet(refDir)
-          sink(repairBatch(batch.toDF(), removal), batchId)
-        }
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
+      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    refreshingLane(docs, sink, checkpoint) { batch =>
+      repairBatch(batch, batch.sparkSession.read.parquet(refDir))
+    }
 
   /** The SLIM banded side of the semantic matcher: (band_idx, band_val,
     * ref_id) only, degenerate buckets capped. Keeping the corpus float
@@ -609,20 +616,13 @@ object Streams {
       planes: Int = 32,
       bands: Int = 4,
       dims: Int = 64,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        sink(
-          embNearDupMatch(
-            batch.toDF(), s.read.parquet(refDir + "/bands"), s.read.parquet(refDir + "/vecs"),
-            tau, planes, bands, dims),
-          batchId)
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
+      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    refreshingLane(vecs, sink, checkpoint) { batch =>
+      val s = batch.sparkSession
+      embNearDupMatch(
+        batch, s.read.parquet(refDir + "/bands"), s.read.parquet(refDir + "/vecs"),
+        tau, planes, bands, dims)
+    }
 
   /** STREAMING INDEX INGEST — the live leg of the persisted-ANN-index
     * lifecycle (build [[graft.operators.Ivf.writeIndex]] → append →
@@ -1149,20 +1149,12 @@ object Streams {
       refDir: String,
       sink: (DataFrame, Long) => Unit,
       numHashes: Int = 6,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val bloom = s.read.parquet(refDir + "/bloom")
-          .collect()(0).getAs[Array[Byte]](0)
-        sink(
-          decontamMatch(batch.toDF(), bloom, s.read.parquet(refDir + "/hashes"), numHashes),
-          batchId)
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
+      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    refreshingLane(docs, sink, checkpoint) { batch =>
+      val s = batch.sparkSession
+      val bloom = s.read.parquet(refDir + "/bloom").collect()(0).getAs[Array[Byte]](0)
+      decontamMatch(batch, bloom, s.read.parquet(refDir + "/hashes"), numHashes)
+    }
 
   // -------------------------------------------------- stateful sessions
 

@@ -33,7 +33,7 @@ class ByteBudgetSpec extends AnyFunSuite {
   private def prodShuffleWrite(q: GraftQuery): Long =
     ShuffleAttribution.measure(spark, s"bytebudget-${q.name}") {
       q.runProd(spark, sf).write.format("noop").mode("overwrite").save()
-    }
+    }.write
 
   /** Budget = ~3x the measured prod shuffle-write at sf0.001 at each
     * row's calibration round (the middle column is the measured value). Revise ONLY with a receipt: a new

@@ -63,7 +63,7 @@ class FencingSpec extends AnyFunSuite {
     val rebuilt = "/tmp/graft-test/fence_ivf_rebuilt"
     operators.Ivf.writeIndex(emb, centroids, rebuilt)
     def rows(d: String) =
-      operators.Ivf.searchIndex(spark, d, queries, centroids, k = 10, nprobe = 8).collect()
+      operators.Ivf.searchIndex(spark, d, queries, k = 10, nprobe = 8).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(rows(dir) == rows(rebuilt),
       "the raced-append index must serve exactly like a rebuild over the union")
@@ -117,7 +117,7 @@ class FencingSpec extends AnyFunSuite {
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
     val model = operators.Pq.train(emb)
     val dir = "/tmp/graft-test/fence_pq"
-    operators.Ivf.writeIndexPq(base, centroids, model, dir)
+    operators.Ivf.writeIndex(base, centroids, dir, codec = operators.Ivf.Codec.Pq(model))
     operators.Ivf.compactIndexHooked(spark, dir, () => {
       operators.Ivf.appendIndexBatch(delta, dir, 3L)
     })
@@ -128,39 +128,12 @@ class FencingSpec extends AnyFunSuite {
       lists.groupBy("vec_id").count().filter(col("count") > 1).count() == 0,
       "raced append on a PQ index: exactly once")
     // and the PQ model itself survived the generation flip
-    val back = operators.Ivf.readPqModel(spark, dir)
-    assert(java.util.Arrays.equals(back.codebook, model.codebook),
-      "the PQ codebook must ride the generation flip")
-  }
-
-  test("legacy 3-arg appendIndex refuses coded and metadata-carrying indexes") {
-    val emb = Tables.embeddings(spark, sf)
-    val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
-    val model = operators.Pq.train(emb)
-    val pqDir = "/tmp/graft-test/fence_legacy_pq"
-    operators.Ivf.writeIndexPq(emb.filter(col("vec_id") >= 100), centroids, model, pqDir)
-    // silently unioning int8 codes into PQ lists was the ADVICE-flagged
-    // failure mode: appended rows null-coded under the serve path
-    val e1 = intercept[IllegalArgumentException] {
-      operators.Ivf.appendIndex(emb.filter(col("vec_id") < 100), centroids, pqDir)
+    operators.Ivf.Codec.of(spark, dir) match {
+      case operators.Ivf.Codec.Pq(back) =>
+        assert(java.util.Arrays.equals(back.codebook, model.codebook),
+          "the PQ codebook must ride the generation flip")
+      case other => fail(s"the compacted index serves as $other, not PQ")
     }
-    assert(e1.getMessage.contains("_pq"), s"refusal must name the dispatch bit: ${e1.getMessage}")
-    val metaDir = "/tmp/graft-test/fence_legacy_meta"
-    operators.Ivf.writeIndex(
-      emb.filter(col("vec_id") >= 100).withColumn("label", (col("vec_id") % 3).cast("int")),
-      centroids, metaDir, Seq("label"))
-    val e2 = intercept[IllegalArgumentException] {
-      operators.Ivf.appendIndex(emb.filter(col("vec_id") < 100), centroids, metaDir)
-    }
-    assert(e2.getMessage.contains("metadata"), s"refusal must explain: ${e2.getMessage}")
-    // the self-describing overload remains the blessed path on both
-    operators.Ivf.appendIndex(
-      emb.filter(col("vec_id") < 100).withColumn("label", (col("vec_id") % 3).cast("int"))
-        .select("vec_id", "embedding", "label"),
-      metaDir)
-    val lists = operators.Ivf.readIndex(spark, metaDir)
-    assert(lists.count() == 500 && lists.filter(col("label").isNull).count() == 0,
-      "the self-describing append must carry the metadata")
   }
 
   test("Clustered: an append landing inside optimize is never lost") {
@@ -260,7 +233,7 @@ class FencingSpec extends AnyFunSuite {
     val dir = "/tmp/graft-test/fence_legacy_old"
     operators.Ivf.writeIndex(emb, centroids, dir)
     def served() = operators.Ivf
-      .searchIndex(spark, dir, emb.filter(col("vec_id") < 8), centroids, k = 10, nprobe = 8)
+      .searchIndex(spark, dir, emb.filter(col("vec_id") < 8), k = 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     val want = served()
     // the r13 in-place swap's crash window: dir staged aside, swap never ran
@@ -295,9 +268,11 @@ class FencingSpec extends AnyFunSuite {
     // would otherwise rotate-and-encode against non-rotated lists
     val sdir = "/tmp/graft-test/fence_rebuild_form"
     val opqModel = operators.Opq.train(emb)
-    operators.Ivf.writeIndexOpq(emb.filter(col("vec_id") >= 250), centroids, opqModel, sdir)
+    operators.Ivf.writeIndex(
+      emb.filter(col("vec_id") >= 250), centroids, sdir, codec = operators.Ivf.Codec.Opq(opqModel))
     val pqModel = operators.Pq.train(emb)
-    operators.Ivf.writeIndexPq(emb.filter(col("vec_id") >= 100), centroids, pqModel, sdir)
+    operators.Ivf.writeIndex(
+      emb.filter(col("vec_id") >= 100), centroids, sdir, codec = operators.Ivf.Codec.Pq(pqModel))
     operators.Ivf.appendIndex(emb.filter(col("vec_id") < 100), sdir)
     val lists = operators.Ivf.readIndex(spark, sdir)
     assert(lists.columns.toSet == Set("vec_id", "codes_pq", "cluster"),

@@ -10,6 +10,11 @@ class OpqSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private def opqModelOf(dir: String): Opq.Model = Ivf.Codec.of(spark, dir) match {
+    case Ivf.Codec.Opq(m) => m
+    case other => fail(s"$dir serves as $other, not OPQ")
+  }
+
   private def topSets(df: DataFrame): Map[Long, Set[Long]] =
     df.collect()
       .map(r => (r.getLong(r.fieldIndex("query_id")), r.getLong(r.fieldIndex("neighbor_id"))))
@@ -156,10 +161,10 @@ class OpqSpec extends AnyFunSuite {
     val model = Opq.train(emb)
     val base = emb.filter(col("vec_id") >= 100)
     val delta = emb.filter(col("vec_id") < 100)
-    Ivf.writeIndexOpq(base, centroids, model, dir)
+    Ivf.writeIndex(base, centroids, dir, codec = Ivf.Codec.Opq(model))
 
     // the OPQ model versions with the index and round-trips bit-for-bit
-    val back = Ivf.readOpqModel(spark, dir)
+    val back = opqModelOf(dir)
     assert(java.util.Arrays.equals(back.rotation, model.rotation))
     assert(back.pq.m == model.pq.m && back.pq.ksub == model.pq.ksub)
     assert(java.util.Arrays.equals(back.pq.codebook, model.pq.codebook))
@@ -177,26 +182,26 @@ class OpqSpec extends AnyFunSuite {
 
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val inMem = rows(Ivf.topKOpq(emb, queries, centroids, model, k = 10, nprobe = 8))
-    assert(rows(Ivf.searchIndexOpq(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
+    val inMem = rows(Ivf.topK(emb, queries, centroids, k = 10, nprobe = 8, codec = Ivf.Codec.Opq(model)))
+    assert(rows(Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
       "full-probe OPQ serve from disk must equal the in-memory rotated ranking row for row")
 
     // the scale property: a pruned serve scans only probed partitions
-    val pruned = Ivf.searchIndexOpq(spark, dir, queries, k = 10, nprobe = 2)
+    val pruned = Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cluster"),
       s"expected a cluster partition filter in the OPQ index scan:\n$plan")
 
     // compaction folds the appended files and carries _opq through
     Ivf.compactIndex(spark, dir)
-    assert(java.util.Arrays.equals(Ivf.readOpqModel(spark, dir).rotation, model.rotation),
+    assert(java.util.Arrays.equals(opqModelOf(dir).rotation, model.rotation),
       "the rotation must survive compaction")
-    assert(rows(Ivf.searchIndexOpq(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
+    assert(rows(Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
       "compaction is layout-only: the OPQ serve must be unchanged")
 
     // served rerank recovers exact recall from disk
     val brute = topSets(Similarity.qBrute.run(spark, sf))
-    val served = topSets(Ivf.searchIndexOpqRerank(spark, dir, queries, emb, nprobe = 8))
+    val served = topSets(Ivf.searchIndexRerank(spark, dir, queries, emb, nprobe = 8))
     val rs = brute.map { case (q, t) =>
       served.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size
     }

@@ -12,6 +12,16 @@ class PqSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private def pqModelOf(dir: String): Pq.Model = operators.Ivf.Codec.of(spark, dir) match {
+    case operators.Ivf.Codec.Pq(m) => m
+    case other => fail(s"$dir serves as $other, not PQ")
+  }
+
+  private def residModelOf(dir: String): Pq.Model = operators.Ivf.Codec.of(spark, dir) match {
+    case operators.Ivf.Codec.PqResid(m) => m
+    case other => fail(s"$dir serves as $other, not residual PQ")
+  }
+
   private def topSets(df: DataFrame): Map[Long, Set[Long]] =
     df.collect()
       .map(r => (r.getLong(r.fieldIndex("query_id")), r.getLong(r.fieldIndex("neighbor_id"))))
@@ -187,7 +197,8 @@ class PqSpec extends AnyFunSuite {
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val full = rows(operators.Ivf.topKPq(emb, queries, centroids, model, k = 10, nprobe = 8))
+    val full = rows(operators.Ivf.topK(emb, queries, centroids, k = 10, nprobe = 8,
+      codec = operators.Ivf.Codec.Pq(model)))
     val pure = rows(Pq.topKPq(emb, queries, model, k = 10))
     assert(full == pure,
       "at nprobe = k-clusters the candidate set is the corpus — ranked rows must match exactly")
@@ -199,21 +210,21 @@ class PqSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 8)
     val model = Pq.train(emb)
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
-    operators.Ivf.writeIndexPq(emb, centroids, model, dir)
+    operators.Ivf.writeIndex(emb, centroids, dir, codec = operators.Ivf.Codec.Pq(model))
 
     // both models survive the directory round-trip bit-for-bit
-    val back = operators.Ivf.readPqModel(spark, dir)
+    val back = pqModelOf(dir)
     assert(back.m == model.m && back.ksub == model.ksub)
     assert(java.util.Arrays.equals(back.codebook, model.codebook))
 
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val served = operators.Ivf.searchIndexPq(spark, dir, queries, k = 10, nprobe = 8)
+    val served = operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)
     assert(rows(served) == rows(Pq.topKPq(emb, queries, model, k = 10)),
       "full-probe serve from disk must equal the in-memory PQ ranking row for row")
 
     // the scale property: a pruned serve scans only probed partitions
-    val pruned = operators.Ivf.searchIndexPq(spark, dir, queries, k = 10, nprobe = 2)
+    val pruned = operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cluster"),
       s"expected a cluster partition filter in the PQ index scan:\n$plan")
@@ -226,10 +237,10 @@ class PqSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 8)
     val model = Pq.train(emb)
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
-    operators.Ivf.writeIndexPq(emb, centroids, model, dir)
+    operators.Ivf.writeIndex(emb, centroids, dir, codec = operators.Ivf.Codec.Pq(model))
     val brute = topSets(Similarity.qBrute.run(spark, sf))
     val served = topSets(
-      operators.Ivf.searchIndexPqRerank(spark, dir, queries, emb, nprobe = 8))
+      operators.Ivf.searchIndexRerank(spark, dir, queries, emb, nprobe = 8))
     val rs = brute.map { case (q, t) =>
       served.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size
     }
@@ -242,28 +253,43 @@ class PqSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
       .withColumn("label", (col("vec_id") % 3).cast("int"))
     val queries = emb.filter(col("vec_id") < 8)
-    val model = Pq.train(emb)
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
-    val dir = "/tmp/graft-test/pq_index_filtered"
-    operators.Ivf.writeIndexPq(emb, centroids, model, dir, Seq("label"))
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    // full probe: the filtered serve must equal the in-memory ADC
-    // ranking over the pre-filtered corpus, ranked row for ranked row
-    val served = operators.Ivf.searchIndexPqFiltered(
-      spark, dir, queries, col("label") === 1, nprobe = 8)
-    val expect = Pq.topKPq(emb.filter(col("label") === 1), queries, model)
-    assert(rows(served) == rows(expect),
+    // one table over every PQ-family layout, each served through the one
+    // searchIndex(..., predicate)
+    val pqModel = Pq.train(emb)
+    val layouts = Seq[(String, operators.Ivf.Persisted)](
+      "pq" -> operators.Ivf.Codec.Pq(pqModel),
+      "pq_resid" -> operators.Ivf.Codec.PqResid(operators.Ivf.trainResidualPq(emb, centroids)),
+      "opq" -> operators.Ivf.Codec.Opq(operators.Opq.train(emb)))
+    val servedRows = layouts.map { case (name, codec) =>
+      val dir = s"/tmp/graft-test/pq_index_filtered_$name"
+      operators.Ivf.writeIndex(emb, centroids, dir, Seq("label"), codec)
+      // full probe: the filtered serve must equal the in-memory ranking
+      // of the same codec over the pre-filtered corpus, row for row
+      val served = operators.Ivf.searchIndex(
+        spark, dir, queries, nprobe = 8, predicate = Some(col("label") === 1))
+      val expect = operators.Ivf.topK(
+        emb.filter(col("label") === 1), queries, centroids, nprobe = 8, codec = codec)
+      val got = rows(served)
+      assert(got == rows(expect),
+        s"$name: filtered serving must rank exactly like the in-memory codec over the filtered corpus")
+      // post-filter contract: every returned neighbor satisfies the predicate
+      served.collect().foreach { r =>
+        assert(r.getLong(r.fieldIndex("neighbor_id")) % 3 == 1,
+          s"$name: neighbor ${r.getLong(r.fieldIndex("neighbor_id"))} violates the filter")
+      }
+      // the scale property: the predicate reached the pruned parquet scan
+      val plan = served.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [cluster") && plan.contains("PushedFilters") &&
+        plan.contains("EqualTo(label,1)"),
+        s"$name: expected the label predicate pushed to the pruned list scan:\n$plan")
+      name -> got
+    }.toMap
+    // the PQ layout also matches the list-free in-memory ADC ranking
+    assert(servedRows("pq") == rows(Pq.topKPq(emb.filter(col("label") === 1), queries, pqModel)),
       "filtered PQ serving must rank exactly like in-memory ADC over the filtered corpus")
-    // post-filter contract: every returned neighbor satisfies the predicate
-    served.collect().foreach { r =>
-      assert(r.getLong(r.fieldIndex("neighbor_id")) % 3 == 1,
-        s"neighbor ${r.getLong(r.fieldIndex("neighbor_id"))} violates the filter")
-    }
-    // the scale property: the predicate reached the parquet scan
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("EqualTo(label,1)"),
-      s"expected the label predicate pushed to the list scan:\n$plan")
   }
 
   test("index ingest is self-describing on code form: appends to a PQ index land PQ codes, exactly once") {
@@ -273,7 +299,7 @@ class PqSpec extends AnyFunSuite {
     val delta = emb.filter(col("vec_id") < 100)
     val model = Pq.train(emb)
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
-    operators.Ivf.writeIndexPq(base, centroids, model, dir)
+    operators.Ivf.writeIndex(base, centroids, dir, codec = operators.Ivf.Codec.Pq(model))
 
     operators.Ivf.appendIndexBatch(delta, dir, 0L)
     operators.Ivf.appendIndexBatch(delta, dir, 0L) // committed replay: no-op
@@ -288,7 +314,7 @@ class PqSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(
-      rows(operators.Ivf.searchIndexPq(spark, dir, queries, k = 10, nprobe = 8)) ==
+      rows(operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)) ==
         rows(Pq.topKPqCoded(Pq.encode(emb, model), queries, model, k = 10)),
       "the appended-to PQ index must serve exactly like the in-memory ranking over the union")
   }
@@ -320,9 +346,9 @@ class PqSpec extends AnyFunSuite {
       }.maxBy { case (s, c) => (s, -c) }._2
     }
 
-    val got = operators.Ivf.topKPqResidual(
-      emb.filter(col("vec_id") < 64), emb.filter(col("vec_id") < 4), centroids, model,
-      k = 60, nprobe = 8).collect()
+    val got = operators.Ivf.topK(
+      emb.filter(col("vec_id") < 64), emb.filter(col("vec_id") < 4), centroids,
+      k = 60, nprobe = 8, codec = operators.Ivf.Codec.PqResid(model)).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
     assert(got.size == 4 * 60, s"top-60 at full probe over 64 vectors: ${got.size}")
 
@@ -380,8 +406,10 @@ class PqSpec extends AnyFunSuite {
       }
       rs.sum / rs.size
     }
-    val rRaw = recallOf(topSets(operators.Ivf.topKPq(emb, queries, centroids, raw, nprobe = 8)))
-    val rResid = recallOf(topSets(operators.Ivf.topKPqResidual(emb, queries, centroids, resid, nprobe = 8)))
+    def ivf(codec: operators.Ivf.Codec) =
+      topSets(operators.Ivf.topK(emb, queries, centroids, nprobe = 8, codec = codec))
+    val rRaw = recallOf(ivf(operators.Ivf.Codec.Pq(raw)))
+    val rResid = recallOf(ivf(operators.Ivf.Codec.PqResid(resid)))
     info(f"full-probe recall@10 at 8 B/vec: raw PQ $rRaw%.3f, residual PQ $rResid%.3f")
     assert(rResid >= rRaw - 0.05,
       f"residual refinement must not lose recall at the same byte budget: $rResid%.3f vs $rRaw%.3f")
@@ -396,10 +424,10 @@ class PqSpec extends AnyFunSuite {
     val model = operators.Ivf.trainResidualPq(emb, centroids)
     val base = emb.filter(col("vec_id") >= 100)
     val delta = emb.filter(col("vec_id") < 100)
-    operators.Ivf.writeIndexPqResid(base, centroids, model, dir)
+    operators.Ivf.writeIndex(base, centroids, dir, codec = operators.Ivf.Codec.PqResid(model))
 
     // the residual codebook versions under its own subdir and round-trips bit-for-bit
-    val back = operators.Ivf.readPqResidModel(spark, dir)
+    val back = residModelOf(dir)
     assert(back.m == model.m && back.ksub == model.ksub)
     assert(java.util.Arrays.equals(back.codebook, model.codebook))
 
@@ -416,22 +444,22 @@ class PqSpec extends AnyFunSuite {
 
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val inMem = rows(operators.Ivf.topKPqResidual(emb, queries, centroids, model, k = 10, nprobe = 8))
-    assert(rows(operators.Ivf.searchIndexPqResid(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
+    val inMem = rows(operators.Ivf.topK(emb, queries, centroids, k = 10, nprobe = 8,
+      codec = operators.Ivf.Codec.PqResid(model)))
+    assert(rows(operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
       "full-probe residual serve from disk must equal the in-memory residual ranking row for row")
 
     // the scale property: a pruned serve scans only probed partitions
-    val pruned = operators.Ivf.searchIndexPqResid(spark, dir, queries, k = 10, nprobe = 2)
+    val pruned = operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cluster"),
       s"expected a cluster partition filter in the residual index scan:\n$plan")
 
     // compaction folds the appended files and carries _pq_resid through
     operators.Ivf.compactIndex(spark, dir)
-    assert(java.util.Arrays.equals(
-      operators.Ivf.readPqResidModel(spark, dir).codebook, model.codebook),
+    assert(java.util.Arrays.equals(residModelOf(dir).codebook, model.codebook),
       "the residual codebook must survive compaction")
-    assert(rows(operators.Ivf.searchIndexPqResid(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
+    assert(rows(operators.Ivf.searchIndex(spark, dir, queries, k = 10, nprobe = 8)) == inMem,
       "compaction is layout-only: the residual serve must be unchanged")
   }
 
@@ -441,10 +469,10 @@ class PqSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 8)
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
     val model = operators.Ivf.trainResidualPq(emb, centroids)
-    operators.Ivf.writeIndexPqResid(emb, centroids, model, dir)
+    operators.Ivf.writeIndex(emb, centroids, dir, codec = operators.Ivf.Codec.PqResid(model))
     val brute = topSets(Similarity.qBrute.run(spark, sf))
     val served = topSets(
-      operators.Ivf.searchIndexPqResidRerank(spark, dir, queries, emb, nprobe = 8))
+      operators.Ivf.searchIndexRerank(spark, dir, queries, emb, nprobe = 8))
     val rs = brute.map { case (q, t) =>
       served.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size
     }

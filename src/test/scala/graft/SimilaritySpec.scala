@@ -294,8 +294,8 @@ class SimilaritySpec extends AnyFunSuite {
     val centroids = operators.Ivf.train(emb, k = 8, iters = 1)
     operators.Ivf.writeIndex(emb, centroids, dir)
 
-    val served = operators.Ivf.searchIndex(spark, dir, queries, centroids)
-    val inMem = operators.Ivf.topKInt8(emb, queries, centroids)
+    val served = operators.Ivf.searchIndex(spark, dir, queries)
+    val inMem = operators.Ivf.topK(emb, queries, centroids, codec = operators.Ivf.Codec.Int8)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(rows(served) == rows(inMem),
@@ -323,8 +323,7 @@ class SimilaritySpec extends AnyFunSuite {
     // int8RerankTopK row for row (rank, neighbor AND sim), proving the
     // rerank phase composed over the index is the Similarity.int8RerankTopK
     // second phase, not a lookalike
-    val served = operators.Ivf.searchIndexRerank(
-      spark, dir, queries, emb, centroids, nprobe = 8)
+    val served = operators.Ivf.searchIndexRerank(spark, dir, queries, emb, nprobe = 8)
     val inMem = operators.Similarity.int8RerankTopK(emb, queries)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -356,9 +355,9 @@ class SimilaritySpec extends AnyFunSuite {
       rs.sum / rs.size
     }
     val int8Only = recallOf(topSets(
-      operators.Ivf.searchIndex(spark, dir, queries, centroids, nprobe = 8)))
+      operators.Ivf.searchIndex(spark, dir, queries, nprobe = 8)))
     val reranked = recallOf(topSets(
-      operators.Ivf.searchIndexRerank(spark, dir, queries, emb, centroids, nprobe = 8)))
+      operators.Ivf.searchIndexRerank(spark, dir, queries, emb, nprobe = 8)))
     info(f"dense index-served recall@10: int8-only $int8Only%.3f, rerank $reranked%.3f")
     assert(int8Only < 0.95,
       f"probe premise broken: int8-only index serving no longer decays here ($int8Only%.3f)")
@@ -436,12 +435,12 @@ class SimilaritySpec extends AnyFunSuite {
         .count()
       finally s.close()
     }
-    def rows(dir: String) = operators.Ivf.searchIndex(spark, dir, queries, centroids).collect()
+    def rows(dir: String) = operators.Ivf.searchIndex(spark, dir, queries).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
 
     operators.Ivf.writeIndex(base, centroids, grown)
     val filesBase = files(grown)
-    operators.Ivf.appendIndex(delta, centroids, grown)
+    operators.Ivf.appendIndex(delta, grown)
     assert(files(grown) > filesBase, "an append lands new files in the touched lists")
     // the appended index must serve EXACTLY like an index rebuilt from
     // the union under the same quantizer — same ranked rows, same sims
@@ -515,7 +514,7 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 8)
     val rebuilt = "/tmp/graft-test/ivf_index_idem_rebuilt"
     operators.Ivf.writeIndex(emb, centroids, rebuilt)
-    def rows(d: String) = operators.Ivf.searchIndex(spark, d, queries, centroids).collect()
+    def rows(d: String) = operators.Ivf.searchIndex(spark, d, queries).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(rows(dir) == rows(rebuilt), "batched appends must serve exactly like a rebuild")
 
@@ -545,10 +544,12 @@ class SimilaritySpec extends AnyFunSuite {
       rc.zip(centroids).forall { case (a, b) => a.sameElements(b) },
       "persisted quantizer must round-trip bit-equal")
     // the _quantizer subdir must be invisible to the list scan: the
-    // self-describing serve equals the explicit-centroid serve
+    // self-describing serve equals the in-memory search under the same
+    // centroids
     assert(rows(operators.Ivf.searchIndex(spark, dir, queries)) ==
-      rows(operators.Ivf.searchIndex(spark, dir, queries, centroids)),
-      "self-describing serve must equal the explicit-centroid serve")
+      rows(operators.Ivf.topK(emb.filter(col("vec_id") % 5 =!= 0), queries, centroids,
+        codec = operators.Ivf.Codec.Int8)),
+      "self-describing serve must equal the in-memory search under the same centroids")
     // self-describing append (assigns against the index's own persisted
     // quantizer) + compaction (quantizer rides along) ≡ full rebuild
     operators.Ivf.appendIndex(emb.filter(col("vec_id") % 5 === 0), dir)
@@ -575,8 +576,8 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     // full probe: the filtered serve must equal brute int8 ranking over
     // the pre-filtered corpus, ranked row for ranked row
-    val served = operators.Ivf.searchIndexFiltered(
-      spark, dir, queries, col("label") === 1, nprobe = 8)
+    val served = operators.Ivf.searchIndex(
+      spark, dir, queries, nprobe = 8, predicate = Some(col("label") === 1))
     val expect = operators.Similarity.int8TopK(emb.filter(col("label") === 1), queries)
     assert(rows(served) == rows(expect),
       "filtered serving must rank exactly like brute int8 over the filtered corpus")
@@ -610,8 +611,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lists.filter(col("label").isNull).count() == 0, "appended metadata must be populated")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val served = operators.Ivf.searchIndexFiltered(
-      spark, dir, queries, col("label") === 1, nprobe = 8)
+    val served = operators.Ivf.searchIndex(
+      spark, dir, queries, nprobe = 8, predicate = Some(col("label") === 1))
     val expect = operators.Similarity.int8TopK(emb.filter(col("label") === 1), queries)
     assert(rows(served) == rows(expect),
       "filtered serving over the appended-to index must equal brute int8 over the filtered corpus")
@@ -719,7 +720,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val queries = emb.filter(col("vec_id") < 8)
     val fMean = recallOf(topSets(operators.Ivf.topK(emb, queries, cSized)))
-    val iMean = recallOf(topSets(operators.Ivf.topKInt8(emb, queries, cSized)))
+    val iMean = recallOf(topSets(operators.Ivf.topK(emb, queries, cSized, codec = operators.Ivf.Codec.Int8)))
     info(f"sampled-train recall@10: float $fMean%.3f, int8 $iMean%.3f")
     assert(fMean >= 0.9, f"sampled-train float IVF recall collapsed: $fMean%.3f")
     assert(iMean >= 0.9, f"sampled-train int8 IVF recall collapsed: $iMean%.3f")

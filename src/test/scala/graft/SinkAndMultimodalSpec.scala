@@ -326,6 +326,7 @@ class CosineSimSpec extends AnyFunSuite {
     // its analysis error class instead of IndexOutOfBounds, ClassCast or
     // an unevaluable-expression INTERNAL_ERROR
     val v = "array(CAST(1.0 AS FLOAT))"
+    val zeroShape = "DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT"
     Seq(
       ("cosine_sim", s"SELECT cosine_sim($v)", "WRONG_NUM_ARGS.WITHOUT_SUGGESTION"),
       ("pq_codes", s"SELECT pq_codes($v)", "WRONG_NUM_ARGS.WITHOUT_SUGGESTION"),
@@ -336,6 +337,13 @@ class CosineSimSpec extends AnyFunSuite {
         "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"),
       ("mat_vec", s"SELECT mat_vec($v, CAST(NULL AS ARRAY<FLOAT>), 1)",
         "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"),
+      // a zero PQ shape is a type-check failure, not a division by zero
+      ("pq_codes", s"SELECT pq_codes($v, $v, 0, 1)", zeroShape),
+      ("pq_codes", s"SELECT pq_codes($v, $v, 1, 0)", zeroShape),
+      ("pq_lut", s"SELECT pq_lut($v, $v, 0, 1)", zeroShape),
+      ("pq_lut", s"SELECT pq_lut($v, $v, 1, 0)", zeroShape),
+      ("pq_resid_codes", s"SELECT pq_resid_codes($v, 0, $v, $v, 0, 1)", zeroShape),
+      ("pq_resid_codes", s"SELECT pq_resid_codes($v, 0, $v, $v, 1, 0)", zeroShape),
     ).foreach { case (name, sql, condition) =>
       val e = analysisError(sql)
       assert(e.getCondition == condition, sql)

@@ -573,7 +573,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     assert(afterWave1.filter($"vec_id" >= 1000L).count() == 5,
       "wave-1 vectors landed in the inverted lists")
     val top = operators.Ivf.searchIndex(
-      spark, idx, emb.filter($"vec_id" === 0L), centroids, k = 1, nprobe = 8).collect()
+      spark, idx, emb.filter($"vec_id" === 0L), k = 1, nprobe = 8).collect()
     assert(top.head.getLong(top.head.fieldIndex("neighbor_id")) == 1000L,
       "the freshly ingested near-duplicate must win a serve from the live index")
 
