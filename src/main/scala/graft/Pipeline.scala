@@ -140,8 +140,7 @@ object StagedDag {
       runDir: String,
       stages: Seq[(String, Map[String, DataFrame] => DataFrame)],
       retries: Int = 2): (Map[String, DataFrame], Seq[StageReport]) = {
-    val fs = new org.apache.hadoop.fs.Path(runDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.IndexLayout.fsOf(spark, runDir)
     var outs = Map.empty[String, DataFrame]
     val reports = Seq.newBuilder[StageReport]
     stages.foreach { case (name, build) =>

@@ -60,24 +60,23 @@ object IndexDrift {
     * visible batch has a defined histogram.
     */
   def cellDrift(spark: SparkSession, dir: String, partitionCol: String): DataFrame = {
-    val fs = IndexLayout.fsOf(spark, dir)
-    val root = Generations.resolveRoot(fs, dir)
+    // the shared live resolution: the base root, then the un-folded
+    // batches only. Batches the `_folded` manifest records must stay
+    // out: a compaction that crashed after the generation flip but
+    // before its batch GC leaves them visible, and their rows are
+    // ALREADY IN the base — a folded batch measured against itself
+    // self-dampens (mass "went where mass was"), so a genuinely stale
+    // batch could read quiet
+    val root +: batchDirs =
+      Generations.liveRoots(IndexLayout.fsOf(spark, dir), dir, IndexLayout.AppendsDataSubdir)
     val base = hist(spark.read.parquet(root), partitionCol)
       .select(col("cell"), col("c").as("b"))
       .localCheckpoint() // one base histogram, joined by every batch
-    // exclude batches the _folded manifest already records: a compaction
-    // that crashed after the generation flip but before its batch GC
-    // leaves them visible, and their rows are ALREADY IN the base — a
-    // folded batch measured against itself self-dampens (mass "went
-    // where mass was"), so a genuinely stale batch could read quiet
-    val folded = Generations.foldedIds(fs, root)
-    val batches = Generations.visibleBatches(fs, dir, IndexLayout.AppendsDataSubdir)
-      .filterNot(folded).sorted
-    require(batches.nonEmpty,
+    require(batchDirs.nonEmpty,
       s"cellDrift: no un-folded append batches under $dir — drift is measured " +
         "against un-folded appends (compaction folds them into the base)")
-    val perBatch = batches.map { id =>
-      hist(spark.read.parquet(s"$dir/${IndexLayout.AppendsDataSubdir}/$id"), partitionCol)
+    val perBatch = batchDirs.map { batchDir =>
+      hist(spark.read.parquet(batchDir), partitionCol)
         .select(col("cell"), col("c").as("a"))
         .join(base, Seq("cell"), "full_outer")
         .agg(
@@ -89,7 +88,7 @@ object IndexDrift {
             coalesce(col("a"), lit(0L)).as("a"),
             coalesce(col("b"), lit(0L)).as("b"))).as("cells"))
         .select(
-          lit(id).as("batch_id"),
+          lit(new org.apache.hadoop.fs.Path(batchDir).getName).as("batch_id"),
           col("na").as("n_rows"),
           expr("aggregate(cells, 0L, (acc, x) -> acc + abs(x.a * nb - na * x.b))")
             .as("l1_dev"),

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.gfunctions.cosine_sim
+import graft.sources.{Generations, IndexLayout}
 
 /** IVF (inverted-file) ANN: a coarse spherical k-means quantizer splits the
   * corpus into cluster lists; a query probes only its `nprobe` nearest
@@ -302,8 +303,8 @@ object Ivf {
       * the model is read once.
       */
     def of(spark: SparkSession, dir: String): Persisted = {
-      val root = liveRoot(spark, dir)
-      val fs = fsOf(spark, dir)
+      val root = IndexLayout.liveRoot(spark, dir)
+      val fs = IndexLayout.fsOf(spark, dir)
       forms.find(f => fs.exists(new Path(s"$root/${f.subdir}")))
         .fold[Persisted](Int8)(_.read(spark, root))
     }
@@ -449,25 +450,14 @@ object Ivf {
     * checkpoint would re-deliver batches the new index never saw.)
     */
   private def resetIndexState(spark: SparkSession, dir: String): Unit =
-    graft.sources.Generations.reset(
-      fsOf(spark, dir), dir, Seq(AppendsDataSubdir, AppendsSubdir) ++ Codec.modelSubdirs)
+    Generations.reset(IndexLayout.fsOf(spark, dir), dir,
+      Seq(IndexLayout.AppendsDataSubdir, IndexLayout.AppendsSubdir) ++ Codec.modelSubdirs)
 
   /** The coarse quantizer persisted with the index at `dir`. */
   def readCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
-    spark.read.parquet(s"${liveRoot(spark, dir)}/$QuantizerSubdir")
+    spark.read.parquet(s"${IndexLayout.liveRoot(spark, dir)}/$QuantizerSubdir")
       .orderBy("cluster").collect()
       .map(_.getSeq[Float](1).toArray)
-
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The current base-generation root of an index directory — `dir`
-    * itself until the first [[compactIndex]], the `_current`-pointed
-    * generation after ([[graft.sources.Generations]] is the shared
-    * commit protocol). Model subdirs live under this root.
-    */
-  private def liveRoot(spark: SparkSession, dir: String): String =
-    graft.sources.Generations.resolveRoot(fsOf(spark, dir), dir)
 
   /** The live inverted lists of a persisted index: the current base
     * generation UNION every committed-but-not-yet-folded append batch
@@ -483,7 +473,7 @@ object Ivf {
     * `_folded` manifest says which).
     */
   def readIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.IndexLayout.readLive(spark, dir)
+    IndexLayout.readLive(spark, dir)
 
   /** Serve top-k from a [[writeIndex]] directory, in whatever form it
     * was written: quantizer and codec model both read back from `dir`.
@@ -577,7 +567,8 @@ object Ivf {
     * read) and must be retried — it is never silently lost.
     */
   def appendIndex(delta: DataFrame, dir: String): Unit =
-    landBatch(encodeForIndex(delta, dir), dir, "adhoc-" + java.util.UUID.randomUUID.toString)
+    IndexLayout.landBatch(
+      encodeForIndex(delta, dir), dir, "adhoc-" + java.util.UUID.randomUUID.toString, "cluster")
 
   /** IDEMPOTENT append for exactly-once streaming ingest
     * ([[graft.streaming.Streams.indexAppendStream]]). Structured
@@ -627,64 +618,33 @@ object Ivf {
       delta: DataFrame, dir: String, batchId: Long, namespace: String = "",
       legacyIds: Seq[String] = Nil): Unit = {
     val spark = delta.sparkSession
-    val fs = fsOf(spark, dir)
+    val fs = IndexLayout.fsOf(spark, dir)
     val id = s"$namespace$batchId"
-    if (graft.sources.IndexLayout.batchMarked(fs, dir, id)) return // committed replay
+    if (IndexLayout.batchMarked(fs, dir, id)) return // committed replay
     if (legacyIds.exists(appendCommitted(spark, dir, _))) return
     // empty batches land nothing — the guard lives in the shared
     // IndexLayout.landBatch (post-write staging check, so the batch
     // plan is never evaluated twice); the marker still lands, because
     // the replay fence must remember the batch committed (as nothing)
-    landBatch(encodeForIndex(delta, dir), dir, id)
-    graft.sources.IndexLayout.markBatch(fs, dir, id)
+    IndexLayout.landBatch(encodeForIndex(delta, dir), dir, id, "cluster")
+    IndexLayout.markBatch(fs, dir, id)
   }
 
   /** True iff an append batch with this fully-qualified id (namespace +
     * batchId) has already committed against this index: marker present,
-    * OR landed-but-unmarked (the crash window between [[landBatch]]'s
-    * atomic visibility rename and the marker create — the same state
-    * [[appendIndexBatch]] self-heals for its OWN id). Both halves
-    * matter for a retired-namespace id
+    * OR landed-but-unmarked (the crash window between
+    * [[IndexLayout.landBatch]]'s atomic visibility rename and the marker
+    * create — the same state [[appendIndexBatch]] self-heals for its
+    * OWN id). Both halves matter for a retired-namespace id
     * ([[graft.streaming.Streams.legacyBatchNamespace]]): a replay that
     * only checked the marker would re-land a crash-window batch under
     * the NEW namespace and duplicate its rows.
     */
   def appendCommitted(spark: SparkSession, dir: String, id: String): Boolean =
     // data-dir-first ordering lives in the shared layer — see
-    // [[graft.sources.IndexLayout.appendCommitted]] for why the reverse
-    // order opens a re-land window against a concurrent compaction
-    graft.sources.IndexLayout.appendCommitted(spark, dir, id)
-
-  /** Land an encoded batch as one atomically visible cluster-aligned
-    * directory under `_appends_data` — the single write path every
-    * append form shares. If the visible directory already exists the
-    * batch is already committed (crash residue from a prior attempt of
-    * the same id) and the landing is a no-op.
-    *
-    * The staging name carries a UNIQUE per-attempt suffix: with a
-    * deterministic name, a replay (or a zombie driver's concurrent
-    * attempt of the same batch) re-creating the path could interleave
-    * with another attempt's commit rename — or with the aged staging
-    * sweep — and commit a PARTIALLY written batch. Per-attempt names
-    * make each staging dir single-writer by construction; a loser of
-    * the visible rename (batch content is attempt-invariant under the
-    * streaming replay contract) deletes its own residue, crashed
-    * attempts age into the sweep.
-    */
-  private def landBatch(encoded: DataFrame, dir: String, id: String): Unit =
-    graft.sources.IndexLayout.landBatch(encoded, dir, id, "cluster")
-
-  /** Batch-commit markers for [[appendIndexBatch]] — underscore-hidden,
-    * top-level, immortal (see the marker note there). Shared layout
-    * constant: [[graft.sources.IndexLayout]].
-    */
-  private val AppendsSubdir = graft.sources.IndexLayout.AppendsSubdir
-
-  /** Committed append-batch data directories — each one atomic unit of
-    * ingest, unioned into [[readIndex]] until [[compactIndex]] folds it
-    * into the next base generation and garbage-collects it.
-    */
-  private val AppendsDataSubdir = graft.sources.IndexLayout.AppendsDataSubdir
+    // [[IndexLayout.appendCommitted]] for why the reverse order opens
+    // a re-land window against a concurrent compaction
+    IndexLayout.appendCommitted(spark, dir, id)
 
   /** Delta rows as the index's own lists: assigned against the persisted
     * quantizer and encoded to the persisted form, so an append can never
@@ -697,7 +657,7 @@ object Ivf {
     */
   private def encodeForIndex(delta: DataFrame, dir: String): DataFrame = {
     val spark = delta.sparkSession
-    val meta = spark.read.parquet(liveRoot(spark, dir)).schema.fieldNames.toSeq
+    val meta = spark.read.parquet(IndexLayout.liveRoot(spark, dir)).schema.fieldNames.toSeq
       .filterNot(Codec.codeColumns ++ Set("vec_id", "cluster"))
     listed(delta, readCentroids(spark, dir), Codec.of(spark, dir), meta)
   }
@@ -736,16 +696,16 @@ object Ivf {
   private[graft] def compactIndexHooked(
       spark: SparkSession, dir: String, afterSnapshot: () => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, dir)
+    val fs = IndexLayout.fsOf(spark, dir)
     val models = Codec.modelSubdirs
     // The protocol (entry GC, fold snapshot fence, marker-before-
-    // complete ordering, post-flip GC, the r13-era .old heal) lives in
-    // the shared layer — [[graft.sources.IndexLayout.compact]]. What is
+    // complete ordering, post-flip GC, the r13-era .old heal) is
+    // [[Generations.fold]] behind [[IndexLayout.compact]]. What is
     // IVF-specific here: lists partition on `cluster`, and the sidecar
     // fold COPIES (never moves) the model subdirs, so the live root
     // stays fully readable until the flip and a concurrent append can
     // still encode against it.
-    graft.sources.IndexLayout.compact(
+    IndexLayout.compact(
       spark, dir, partitionCol = "cluster", sidecarNames = models,
       foldSidecars = (root, _, nextRoot) =>
         models.foreach { sub =>

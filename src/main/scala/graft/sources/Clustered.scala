@@ -1,7 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** Range-clustered parquet layout: the data-skipping discipline for
   * SELECTIVE predicates on keys too fine for directory partitioning.
@@ -63,7 +68,7 @@ object Clustered {
     // full rebuild = new table: without this reset a stale _current
     // would keep readers resolving into a dead generation beside the
     // fresh flat data
-    Generations.reset(fsOf(df.sparkSession, dir), dir, Seq(BatchesSubdir))
+    Generations.reset(IndexLayout.fsOf(df.sparkSession, dir), dir, Seq(BatchesSubdir))
     df.repartitionByRange(files, col(key))
       .sortWithinPartitions(key)
       .write.options(bloomOpts(bloomCols)).mode("overwrite").parquet(dir)
@@ -89,7 +94,7 @@ object Clustered {
       df: DataFrame, dir: String, key0: String, key1: String,
       files: Int = 32, bits: Int = 12, relErr: Double = 1e-4,
       bloomCols: Seq[String] = Nil): Unit = {
-    Generations.reset(fsOf(df.sparkSession, dir), dir, Seq(BatchesSubdir)) // full rebuild
+    Generations.reset(IndexLayout.fsOf(df.sparkSession, dir), dir, Seq(BatchesSubdir)) // full rebuild
     val buckets = 1 << bits
     val probs = Array.tabulate(buckets - 1)(i => (i + 1).toDouble / buckets)
     // one sketch pass covers both keys (approxQuantile merges per-partition
@@ -116,10 +121,6 @@ object Clustered {
     * can never delete a batch it raced with.
     */
   private val BatchesSubdir = "_batches"
-
-  private def fsOf(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Append a batch to a clustered directory. The batch sorts WITHIN
     * itself (its own files stay skippable against each other) but
@@ -149,34 +150,43 @@ object Clustered {
     commitBatch(df, dir, key, "adhoc-" + java.util.UUID.randomUUID.toString,
       files, bloomCols)
 
-  /** The ONE commit path every Clustered append form shares (the
-    * landBatch discipline of the index lane): write the sorted batch
-    * to a staging dir with a UNIQUE per-attempt suffix, then make it
-    * visible with one atomic rename. The unique suffix matters: with
-    * a deterministic staging name, a replay (or a zombie driver's
-    * concurrent attempt) re-creating the path could interleave with
-    * another attempt's commit rename — or with the aged staging
-    * sweep's delete walk — and commit a PARTIALLY written batch.
-    * Per-attempt names make every staging dir single-writer by
-    * construction; losers of the visible-rename race (and crashed
-    * attempts) leave uniquely-named residue the aged sweep collects.
+  /** The ONE commit path every Clustered append form shares: the
+    * sorted batch written through [[Generations.stagedCommit]] (unique
+    * per-attempt staging, one atomic rename into `_batches/<id>`).
     */
   private def commitBatch(
       df: DataFrame, dir: String, key: String, id: String,
-      files: Int, bloomCols: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(df.sparkSession, dir)
-    val staging = s"$dir/$BatchesSubdir/.$id-${java.util.UUID.randomUUID.toString}"
-    df.repartitionByRange(files, col(key))
-      .sortWithinPartitions(key)
-      .write.options(bloomOpts(bloomCols)).parquet(staging)
-    val visible = new Path(s"$dir/$BatchesSubdir/$id")
-    // another attempt of the SAME id may have won the commit (batch
-    // content is attempt-invariant) — ours is then redundant residue;
-    // commitRename also guards the rename-INTO-existing-dir nesting
-    Generations.commitRename(fs, new Path(staging), visible,
-      s"Clustered.commitBatch: could not commit $staging and $visible is absent")
-  }
+      files: Int, bloomCols: Seq[String]): Unit =
+    Generations.stagedCommit(
+      IndexLayout.fsOf(df.sparkSession, dir), new Path(s"$dir/$BatchesSubdir/$id"), id) { staging =>
+      df.repartitionByRange(files, col(key))
+        .sortWithinPartitions(key)
+        .write.options(bloomOpts(bloomCols)).parquet(staging.toString)
+      true
+    }
+
+  /** True iff a stream batch with this (namespace, batchId) already
+    * committed against this table — [[appendBatch]]'s structural replay
+    * fence (visible dir ∨ cumulative `_folded` manifest). Prefer
+    * passing `legacyIds` to [[appendBatch]] over calling this from a
+    * lane: the operator checks legacy forms against the SAME manifest
+    * read its own fence does (one read per batch, inside the lane's
+    * transient-retry envelope).
+    */
+  def batchCommitted(
+      spark: SparkSession, dir: String, namespace: String, batchId: Long): Boolean =
+    committed(IndexLayout.fsOf(spark, dir), dir, Seq(s"b-$namespace$batchId"))
+
+  /** The append-once fence over batch ids: any one visible under
+    * `_batches` (committed, not yet folded), else any one in the current
+    * generation's `_folded` manifest (committed and folded) — one
+    * manifest read per call.
+    */
+  private def committed(fs: FileSystem, dir: String, ids: Seq[String]): Boolean =
+    ids.exists(id => fs.exists(new Path(s"$dir/$BatchesSubdir/$id"))) || {
+      val folded = Generations.foldedIds(fs, Generations.resolveRoot(fs, dir))
+      ids.exists(folded)
+    }
 
   /** IDEMPOTENT batch append for exactly-once STREAMING ingest into a
     * clustered table ([[graft.streaming.Streams.clusteredAppendStream]])
@@ -207,47 +217,20 @@ object Clustered {
     * replays and silently dropped. [[graft.streaming.Streams
     * .clusteredAppendStream]] derives it from the checkpoint path;
     * direct callers own the one-checkpoint-per-namespace contract.
-    */
-  /** True iff a stream batch with this (namespace, batchId) already
-    * committed against this table — [[appendBatch]]'s structural replay
-    * fence (visible dir ∨ cumulative `_folded` manifest). Prefer
-    * passing `legacyIds` to [[appendBatch]] over calling this from a
-    * lane: the operator checks legacy forms against the SAME manifest
-    * read its own fence does (one read per batch, inside the lane's
-    * transient-retry envelope).
-    */
-  def batchCommitted(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      namespace: String, batchId: Long): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, dir)
-    val id = s"b-$namespace$batchId"
-    fs.exists(new Path(s"$dir/$BatchesSubdir/$id")) ||
-      Generations.foldedIds(fs, Generations.resolveRoot(fs, dir)).contains(id)
-  }
-
-  /** IDEMPOTENT batch append; `legacyIds` are fully-formed batch-dir
-    * names (`b-<retired namespace><batchId>`) whose commit records —
-    * visible dir or folded-manifest entry — also fence the replay, so
-    * an upgrade that changed the id derivation cannot re-append a
-    * pre-upgrade batch (see
-    * [[graft.streaming.Streams.legacyBatchNamespace]]).
+    *
+    * `legacyIds` are fully-formed batch-dir names (`b-<retired
+    * namespace><batchId>`) whose commit records — visible dir or
+    * folded-manifest entry — also fence the replay, so an upgrade that
+    * changed the id derivation cannot re-append a pre-upgrade batch
+    * (see [[graft.streaming.Streams.legacyBatchNamespace]]).
     */
   def appendBatch(
       df: DataFrame, dir: String, key: String, batchId: Long,
       files: Int = 4, bloomCols: Seq[String] = Nil,
       namespace: String = "", legacyIds: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(df.sparkSession, dir)
     val id = s"b-$namespace$batchId"
-    val visible = new Path(s"$dir/$BatchesSubdir/$id")
-    if (fs.exists(visible)) return // committed, not yet folded
-    if (legacyIds.exists(l => fs.exists(new Path(s"$dir/$BatchesSubdir/$l"))))
-      return // committed pre-upgrade, not yet folded
-    val folded = Generations.foldedIds(fs, Generations.resolveRoot(fs, dir))
-    if (folded.contains(id) || legacyIds.exists(folded))
-      return // committed and already folded into the base generation
-    commitBatch(df, dir, key, id, files, bloomCols)
+    if (!committed(IndexLayout.fsOf(df.sparkSession, dir), dir, id +: legacyIds))
+      commitBatch(df, dir, key, id, files, bloomCols)
   }
 
   /** Re-cluster a fragmented directory back to a pristine [[save]]
@@ -273,77 +256,19 @@ object Clustered {
 
   /** [[optimize]] with a test seam: `afterSnapshot` runs between the
     * fold snapshot and the generation write — the window where the old
-    * in-place swap lost concurrent appends.
+    * in-place swap lost concurrent appends. The protocol is
+    * [[Generations.fold]]; the writer is [[save]] or [[saveZOrder]].
     */
   private[graft] def optimizeHooked(
       spark: SparkSession, dir: String, key: String,
       key1: Option[String], files: Int, bloomCols: Seq[String],
-      afterSnapshot: () => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, dir)
-    // migration heal for the r13-era in-place-swap crash state (only
-    // copy stranded at dir + ".old", live dir missing)
-    val legacyOld = new Path(dir + ".old")
-    if (!fs.exists(new Path(dir)) && fs.exists(legacyOld)) {
-      require(fs.rename(legacyOld, new Path(dir)),
-        s"optimize: could not restore $dir from a legacy .old crash state")
-    } else if (fs.exists(legacyOld)) fs.delete(legacyOld, true) // stale legacy residue
-    // entry GC: non-current generations (incomplete writes, unflipped
-    // orphans, the pre-flip previous base), already-folded batch data,
-    // and abandoned dot-staging from crashed appends — only past the
-    // age threshold (see Generations.sweepStaging for the race a
-    // fresh-staging sweep would open)
-    Generations.sweepStaging(fs, dir, BatchesSubdir)
-    val cur = Generations.currentGen(fs, dir)
-    Generations.allGens(fs, dir).filterNot(cur.contains)
-      .foreach(n => fs.delete(new Path(Generations.genDir(dir, n)), true))
-    if (cur.isDefined) deleteFlatData(fs, dir)
-    val root = Generations.resolveRoot(fs, dir)
-    // walk the small VISIBLE set against the manifest, never the
-    // manifest against the filesystem (one FS op per historical batch)
-    val foldedNow = Generations.foldedIds(fs, root)
-    Generations.visibleBatches(fs, dir, BatchesSubdir).filter(foldedNow)
-      .foreach(id => fs.delete(new Path(s"$dir/$BatchesSubdir/$id"), true))
-    // fold snapshot — batches committing after this stay live extras
-    val toFold = Generations.visibleBatches(fs, dir, BatchesSubdir).filterNot(foldedNow)
-    afterSnapshot()
-    val next = cur.getOrElse(0) + 1
-    val nextRoot = Generations.genDir(dir, next)
-    val rows = toFold
-      .foldLeft(spark.read.parquet(root)) { (df, b) =>
-        df.unionByName(spark.read.parquet(s"$dir/$BatchesSubdir/$b"))
-      }
-    key1 match {
-      case Some(k1) => saveZOrder(rows, nextRoot, key, k1, files, bloomCols = bloomCols)
-      case None => save(rows, nextRoot, key, files, bloomCols = bloomCols)
-    }
-    // the manifest must carry every id a REPLAY could still check
-    // (stream batches — forever, ~bytes per batch, the documented
-    // growth), but ad-hoc ids are never replayed: once their folded
-    // data dir is GC'd they are provably dead and pruned, so ad-hoc
-    // ingest does not grow the manifest beyond one fold cycle
-    val carried = (foldedNow ++ toFold).filter(id =>
-      !id.startsWith("adhoc-") ||
-        fs.exists(new Path(s"$dir/$BatchesSubdir/$id")))
-    Generations.writeFolded(fs, nextRoot, carried)
-    Generations.markComplete(fs, nextRoot)
-    Generations.flip(fs, dir, next)
-    // post-flip GC: previous base + just-folded batch data
-    if (cur.isDefined) fs.delete(new Path(root), true) else deleteFlatData(fs, dir)
-    toFold.foreach(id => fs.delete(new Path(s"$dir/$BatchesSubdir/$id"), true))
-  }
-
-  /** Delete the flat (generation-0) data files at the top of `dir`,
-    * leaving protocol state (`_current`, `_gen-*`, `_batches`) intact.
-    */
-  private def deleteFlatData(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (fs.exists(new Path(dir)))
-      fs.listStatus(new Path(dir)).toSeq
-        .filter(st => st.isFile &&
-          (st.getPath.getName.endsWith(".parquet") || st.getPath.getName == "_SUCCESS"))
-        .foreach(st => fs.delete(st.getPath, false))
-  }
+      afterSnapshot: () => Unit): Unit =
+    Generations.fold(spark, dir, BatchesSubdir,
+      write = (rows, nextRoot) => key1 match {
+        case Some(k1) => saveZOrder(rows, nextRoot, key, k1, files, bloomCols = bloomCols)
+        case None => save(rows, nextRoot, key, files, bloomCols = bloomCols)
+      },
+      afterSnapshot = afterSnapshot)
 
   /** The live table: current base generation plus committed-but-not-
     * yet-folded append batches. The resolution is a point-in-time
@@ -353,7 +278,7 @@ object Clustered {
     */
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(
-      Generations.liveRoots(fsOf(spark, dir), dir, BatchesSubdir): _*)
+      Generations.liveRoots(IndexLayout.fsOf(spark, dir), dir, BatchesSubdir): _*)
 
   /** Per-row-group (min, max) statistics of a LONG column across every
     * parquet file under `dir` — the structural evidence data skipping
@@ -361,32 +286,15 @@ object Clustered {
     * uses the parquet-hadoop classes Spark ships).
     */
   def rowGroupRanges(
-      spark: SparkSession, dir: String, key: String): Seq[(Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    // the same resolution as [[read]]: current generation + live batches
-    val roots = Generations.liveRoots(fs, dir, BatchesSubdir)
-    roots.map(new Path(_)).flatMap(fs.listStatus(_).toSeq)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          reader.getFooter.getBlocks.asScala.toSeq.map { block =>
-            val colMeta = block.getColumns.asScala
-              .find(_.getPath.toDotString == key)
-              .getOrElse(throw new IllegalArgumentException(
-                s"column $key not found in ${st.getPath}"))
-            val stats = colMeta.getStatistics
-            (stats.genericGetMin.asInstanceOf[Number].longValue(),
-              stats.genericGetMax.asInstanceOf[Number].longValue())
-          }
-        } finally reader.close()
-      }
-  }
+      spark: SparkSession, dir: String, key: String): Seq[(Long, Long)] =
+    footerBlocks(spark, dir) { (_, block, file) =>
+      val stats = block.getColumns.asScala
+        .find(_.getPath.toDotString == key)
+        .getOrElse(throw new IllegalArgumentException(s"column $key not found in $file"))
+        .getStatistics
+      (stats.genericGetMin.asInstanceOf[Number].longValue(),
+        stats.genericGetMax.asInstanceOf[Number].longValue())
+    }
 
   /** Footer-derived bloom-filter evidence for a point probe `value` on
     * `key` across the resolved layout: (row groups carrying a bloom
@@ -399,32 +307,33 @@ object Clustered {
   def bloomStats(
       spark: SparkSession, dir: String, key: String,
       value: Long): (Int, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
+    // per row group: None = no filter for the column, Some(absent)
+    val perBlock = footerBlocks(spark, dir) { (reader, block, _) =>
+      block.getColumns.asScala.find(_.getPath.toDotString == key)
+        .filter(_.getBloomFilterOffset >= 0)
+        .map { colMeta =>
+          val bf = reader.getBloomFilterDataReader(block).readBloomFilter(colMeta)
+          bf != null && !bf.findHash(bf.hash(value))
+        }
+    }
+    (perBlock.count(_.isDefined), perBlock.count(_.contains(true)), perBlock.size)
+  }
+
+  /** `perBlock` over every row group of every parquet file in the live
+    * layout — the same resolution as [[read]]: current generation plus
+    * live batches.
+    */
+  private def footerBlocks[A](spark: SparkSession, dir: String)(
+      perBlock: (ParquetFileReader, BlockMetaData, Path) => A): Seq[A] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    val roots = Generations.liveRoots(fs, dir, BatchesSubdir)
-    var withBloom = 0; var negative = 0; var total = 0
-    roots.map(new Path(_)).flatMap(fs.listStatus(_).toSeq)
+    val fs = IndexLayout.fsOf(spark, dir)
+    Generations.liveRoots(fs, dir, BatchesSubdir).map(new Path(_)).flatMap(fs.listStatus(_).toSeq)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .foreach { st =>
+      .flatMap { st =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          reader.getFooter.getBlocks.asScala.foreach { block =>
-            total += 1
-            block.getColumns.asScala.find(_.getPath.toDotString == key).foreach { colMeta =>
-              if (colMeta.getBloomFilterOffset >= 0) {
-                withBloom += 1
-                val bf = reader.getBloomFilterDataReader(block).readBloomFilter(colMeta)
-                if (bf != null && !bf.findHash(bf.hash(value))) negative += 1
-              }
-            }
-          }
-        } finally reader.close()
+        try reader.getFooter.getBlocks.asScala.toSeq.map(perBlock(reader, _, st.getPath))
+        finally reader.close()
       }
-    (withBloom, negative, total)
   }
 
   /** Count of row-group pairs whose key ranges strictly overlap (shared

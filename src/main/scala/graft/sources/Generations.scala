@@ -1,16 +1,18 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 
-/** Generation-pointer commit protocol shared by the maintained on-disk
-  * layouts (the persisted ANN index [[graft.operators.Ivf]] and the
-  * range/Z-order clustered tables [[Clustered]]). It exists to make the
-  * append/compact maintenance lifecycle MULTI-WRITER safe: with an
-  * in-place swap, a concurrent append landing between compaction's
-  * listing snapshot and its directory swap is renamed into the doomed
-  * copy and silently deleted. Under this protocol the two writers never
-  * touch the same files at all:
+/** Generation-pointer commit protocol shared by every appendable on-disk
+  * layout: the clustered tables [[Clustered]], the persisted indexes on
+  * [[IndexLayout]] (IVF lists and sparse BM25 postings), and the
+  * rotating stream sink. It exists to make the append/compact
+  * maintenance lifecycle MULTI-WRITER safe: with an in-place swap, a
+  * concurrent append landing between compaction's listing snapshot and
+  * its directory swap is renamed into the doomed copy and silently
+  * deleted. Under this protocol the two writers never touch the same
+  * files at all:
   *
   *  - the BASE layout lives in a generation directory (`dir/_gen-N`;
   *    the flat `dir` itself is the implicit generation 0 every fresh
@@ -19,21 +21,26 @@ import java.nio.charset.StandardCharsets
   *  - APPENDS never modify a generation: each batch stages under a
   *    dot-prefixed directory and becomes visible with ONE atomic
   *    directory rename into the append area (`_appends_data` for the
-  *    index, `_batches` for clustered tables). Compaction either sees a
-  *    whole committed batch or none of it — never a prefix;
+  *    indexes, `_batches` for clustered tables, `rot=<n>` for the sink).
+  *    [[stagedCommit]] is the one implementation every layout's batch
+  *    write runs through. Compaction either sees a whole committed
+  *    batch or none of it — never a prefix;
   *  - COMPACTION folds base + visible batches into a brand-new
   *    generation, records the folded batch ids in the new generation's
   *    `_folded` manifest, marks it `_complete`, and atomically flips
-  *    the `_current` pointer. Batches that commit while compaction is
-  *    running simply miss the snapshot, stay out of the manifest, and
-  *    remain visible as live extras under the new generation — zero
-  *    coordination, zero loss (FencingSpec interleaves a real append
-  *    between the snapshot and the flip and proves it);
+  *    the `_current` pointer. [[fold]] is the one implementation every
+  *    compacting layout calls, passing only its batch area, its writer,
+  *    its flat gen-0 names and a pre-complete hook. Batches that commit
+  *    while compaction is running simply miss the snapshot, stay out of
+  *    the manifest, and remain visible as live extras under the new
+  *    generation — zero coordination, zero loss (FencingSpec interleaves
+  *    a real append between the snapshot and the flip and proves it);
   *  - READERS resolve `_current` -> generation root and read base plus
-  *    committed-minus-folded batches. Resolution is a point-in-time
-  *    snapshot: a reader that raced a flip may fail against
-  *    just-collected files and must retry (the streaming ingest lane
-  *    retries by construction) — it can never read a half-folded state.
+  *    committed-minus-folded batches ([[liveRoots]]). Resolution is a
+  *    point-in-time snapshot: a reader that raced a flip may fail
+  *    against just-collected files and must retry (the streaming ingest
+  *    lane retries by construction) — it can never read a half-folded
+  *    state.
   *
   * Crash matrix (single compactor, any number of appenders/readers):
   * a crash during the new generation's write leaves the pointer on the
@@ -44,7 +51,8 @@ import java.nio.charset.StandardCharsets
   * redoes it; a crash mid-flip (pointer deleted, rename pending) is the
   * only pointerless state, and there the highest COMPLETE generation is
   * by construction the newest committed layout, which is exactly what
-  * [[resolveRoot]] falls back to.
+  * [[resolveRoot]] falls back to. FencingSpec's crash-state table runs
+  * every row of this matrix against each layout through its own reader.
   */
 object Generations {
 
@@ -104,7 +112,7 @@ object Generations {
     * the mid-flip crash window [[resolveRoot]]'s highest-complete-gen
     * fallback covers (generation `n` is already `_complete` here).
     */
-  def flip(fs: FileSystem, dir: String, n: Int): Unit = {
+  private def flip(fs: FileSystem, dir: String, n: Int): Unit = {
     val tmp = new Path(s"$dir/.$Pointer-$n")
     writeSmall(fs, tmp, n.toString)
     val ptr = new Path(s"$dir/$Pointer")
@@ -123,10 +131,10 @@ object Generations {
     else readSmall(fs, p).split("\n").iterator.filter(_.nonEmpty).toSet
   }
 
-  def writeFolded(fs: FileSystem, root: String, ids: Set[String]): Unit =
+  private def writeFolded(fs: FileSystem, root: String, ids: Set[String]): Unit =
     writeSmall(fs, new Path(s"$root/$Folded"), ids.toSeq.sorted.mkString("\n"))
 
-  def markComplete(fs: FileSystem, root: String): Unit =
+  private[graft] def markComplete(fs: FileSystem, root: String): Unit =
     writeSmall(fs, new Path(s"$root/$Complete"), "")
 
   /** Reset every trace of the protocol under `dir` — pointer,
@@ -170,8 +178,31 @@ object Generations {
     root +: visibleBatches(fs, dir, area).filterNot(folded).map(b => s"$dir/$area/$b")
   }
 
-  /** THE staging→visible commit rename, shared by both ingest lanes
-    * ([[graft.operators.Ivf]] landBatch, [[Clustered]] commitBatch).
+  /** THE staged batch commit every appendable layout shares
+    * ([[IndexLayout.landBatch]], `Clustered.commitBatch`,
+    * `Streams.writeRotatedBatch`): a visible dir that already exists
+    * means the batch is committed and the call is a no-op; otherwise
+    * `write` fills a dot-prefixed sibling `.<stem>-<uuid>` and
+    * [[commitRename]] makes it visible. `write` returns false when it
+    * decided the batch must not land (it then cleans its own staging).
+    *
+    * The staging name carries a UNIQUE per-attempt suffix: with a
+    * deterministic name, a replay (or a zombie driver's concurrent
+    * attempt of the same batch) re-creating the path could interleave
+    * with another attempt's commit rename — or with the aged staging
+    * sweep's delete walk — and commit a PARTIALLY written batch.
+    * Per-attempt names make every staging dir single-writer by
+    * construction; losers of the visible-rename race delete their own
+    * residue, crashed attempts age into [[sweepStaging]].
+    */
+  def stagedCommit(fs: FileSystem, visible: Path, stem: String)(write: Path => Boolean): Unit = {
+    if (fs.exists(visible)) return
+    val staging = new Path(visible.getParent, s".$stem-${java.util.UUID.randomUUID.toString}")
+    if (write(staging))
+      commitRename(fs, staging, visible, s"stagedCommit: could not commit $staging and $visible is absent")
+  }
+
+  /** The staging→visible rename of [[stagedCommit]].
     * Hadoop `FileSystem.rename` does NOT fail when the destination
     * directory already exists — HDFS and the RawLocalFileSystem
     * fallback move the source INTO it (returning true), so a loser of
@@ -196,6 +227,85 @@ object Generations {
       val nested = new Path(visible, staging.getName)
       if (fs.exists(nested)) fs.delete(nested, true)
     }
+  }
+
+  /** THE compaction fold, shared by every compacting layout
+    * ([[Clustered]] optimize, [[IndexLayout.compact]]): fold the base at
+    * the live root plus every visible, unfolded batch under `dir/<area>`
+    * into generation N+1 and flip the pointer to it. In order:
+    *
+    *  - the r13-era `.old` heal (a crash between the old in-place
+    *    swap's two renames left the only copy at `dir + ".old"`);
+    *  - entry GC: the aged staging sweep, non-current generations
+    *    (incomplete writes, unflipped orphans), the flat gen-0 data once
+    *    a generation is current, and already-folded batch data a crashed
+    *    post-flip GC left;
+    *  - the fold snapshot: batches committing after the listing stay
+    *    visible extras under the new generation — that is the fence
+    *    (`afterSnapshot` is the test seam in that window);
+    *  - `write(base ∪ batches, nextRoot)`, the layout's own writer;
+    *  - the carried cumulative `_folded` manifest;
+    *  - `beforeComplete(liveRoot, foldedIds, nextRoot)` — anything that
+    *    must be durable before the generation is: the index's sidecar
+    *    fold (written into `nextRoot` only, the live root stays fully
+    *    readable) and its replay markers;
+    *  - `_complete`, the pointer flip, and post-flip GC of the previous
+    *    base and the folded batch data.
+    *
+    * `flatData` names the top-level entries of a flat (gen-0) layout
+    * beyond its parquet part files and `_SUCCESS`: partition dirs and
+    * sidecars for the indexes.
+    */
+  def fold(
+      spark: SparkSession, dir: String, area: String,
+      write: (DataFrame, String) => Unit,
+      afterSnapshot: () => Unit,
+      flatData: String => Boolean = _ => false,
+      beforeComplete: (String, Seq[String], String) => Unit = (_, _, _) => ()): Unit = {
+    val fs = IndexLayout.fsOf(spark, dir)
+    val legacyOld = new Path(dir + ".old")
+    if (!fs.exists(new Path(dir)) && fs.exists(legacyOld)) {
+      require(fs.rename(legacyOld, new Path(dir)),
+        s"fold: could not restore $dir from a legacy .old crash state")
+    } else if (fs.exists(legacyOld)) fs.delete(legacyOld, true) // stale legacy residue
+    // only staging past the age threshold (see sweepStaging for the
+    // race a fresh-staging sweep would open)
+    sweepStaging(fs, dir, area)
+    val cur = currentGen(fs, dir)
+    allGens(fs, dir).filterNot(cur.contains).foreach(n => fs.delete(new Path(genDir(dir, n)), true))
+    val deleteFlat = () =>
+      if (fs.exists(new Path(dir)))
+        fs.listStatus(new Path(dir)).map(_.getPath)
+          .filter(p => p.getName.endsWith(".parquet") || p.getName == "_SUCCESS" || flatData(p.getName))
+          .foreach(fs.delete(_, true))
+    if (cur.isDefined) deleteFlat()
+    val root = resolveRoot(fs, dir)
+    val batchDir = (id: String) => s"$dir/$area/$id"
+    // walk the small VISIBLE set against the manifest, never the
+    // manifest against the filesystem (one FS op per historical batch)
+    val foldedNow = foldedIds(fs, root)
+    visibleBatches(fs, dir, area).filter(foldedNow)
+      .foreach(id => fs.delete(new Path(batchDir(id)), true))
+    val toFold = visibleBatches(fs, dir, area).filterNot(foldedNow)
+    afterSnapshot()
+    val next = cur.getOrElse(0) + 1
+    val nextRoot = genDir(dir, next)
+    write(
+      toFold.foldLeft(spark.read.parquet(root))((df, b) => df.unionByName(spark.read.parquet(batchDir(b)))),
+      nextRoot)
+    // the manifest must carry every id a REPLAY could still check
+    // (stream batches — forever, ~bytes per batch, the documented
+    // growth), but ad-hoc ids are never replayed: once their folded
+    // data dir is GC'd they are provably dead and pruned, so ad-hoc
+    // ingest does not grow the manifest beyond one fold cycle
+    val carried = (foldedNow ++ toFold).filter(id =>
+      !id.startsWith("adhoc-") || fs.exists(new Path(batchDir(id))))
+    writeFolded(fs, nextRoot, carried)
+    beforeComplete(root, toFold, nextRoot)
+    markComplete(fs, nextRoot)
+    flip(fs, dir, next)
+    if (cur.isDefined) fs.delete(new Path(root), true) else deleteFlat()
+    toFold.foreach(id => fs.delete(new Path(batchDir(id)), true))
   }
 
   /** Appends must not go this long without writing a file, or risk

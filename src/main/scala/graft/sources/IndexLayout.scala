@@ -4,29 +4,29 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** The GENERIC persisted-index layout protocol, extracted from the IVF
-  * lifecycle (r17) so the sparse BM25 postings index shares one
-  * implementation of the hard parts instead of re-deriving them:
+/** The GENERIC persisted-index layout, shared by the IVF lists
+  * ([[graft.operators.Ivf]]) and the sparse BM25 postings index
+  * ([[graft.operators.SparseIndex]]) on top of the [[Generations]]
+  * protocol:
   *
   *  - base layout: a partitioned parquet table at `dir` (generation 0)
   *    or under a [[Generations]] `_current`-pointed generation dir;
   *  - appends: each batch one atomically visible directory under
-  *    `_appends_data/<id>` (staged dot-prefixed with a per-attempt
-  *    UUID, committed by ONE rename — see [[landBatch]]);
+  *    `_appends_data/<id>`, landed by [[landBatch]] through
+  *    [[Generations.stagedCommit]], the staged commit every appendable
+  *    layout shares;
   *  - replay fence: immortal marker files under `_appends/<id>`;
-  *  - compaction: fold visible batches into the next generation behind
-  *    the full crash matrix (entry GC, fold snapshot fence, sidecar
-  *    carry, folded manifest, marker-before-complete ordering,
-  *    post-flip GC) — see [[compact]].
+  *  - compaction: [[compact]] is a call to [[Generations.fold]], the one
+  *    implementation of the crash matrix; what it adds is the
+  *    partitioned, sorted writer, the sidecar fold and the replay
+  *    markers of the folded batches (both before `_complete`).
   *
   * What stays INDEX-SPECIFIC and is passed in: the partition column
   * (`cluster` for IVF lists, `bkt` for sparse postings), the sidecar
   * subdirectories living beside the data inside a root (quantizer/PQ
   * models for IVF, the `(S, N)` totals for BM25), and HOW sidecars fold
   * across a compaction (models COPY; totals SUM over the folded units —
-  * the `foldSidecars` hook). Every behavioral guarantee the IVF specs
-  * pin (FencingSpec, the crash matrix, idempotent replay) exercises
-  * this shared code.
+  * the `foldSidecars` hook).
   */
 private[graft] object IndexLayout {
 
@@ -62,18 +62,10 @@ private[graft] object IndexLayout {
       .reduceLeft(_ unionByName _)
 
   /** Land an encoded batch as one atomically visible partition-aligned
-    * directory under `_appends_data`. If the visible directory already
-    * exists the batch is already committed (crash residue of a prior
-    * attempt of the same id) and the landing is a no-op.
-    *
-    * The staging name carries a UNIQUE per-attempt suffix: with a
-    * deterministic name, a replay (or a zombie driver's concurrent
-    * attempt of the same batch) re-creating the path could interleave
-    * with another attempt's commit rename — or with the aged staging
-    * sweep — and commit a PARTIALLY written batch. Per-attempt names
-    * make each staging dir single-writer by construction; a loser of
-    * the visible rename deletes its own residue, crashed attempts age
-    * into the sweep.
+    * directory under `_appends_data` via [[Generations.stagedCommit]]:
+    * if the visible directory already exists the batch is already
+    * committed (crash residue of a prior attempt of the same id) and the
+    * landing is a no-op.
     *
     * `writeExtras` runs against the STAGING path before the commit
     * rename, so per-batch sidecars (the sparse index's totals row)
@@ -89,26 +81,21 @@ private[graft] object IndexLayout {
       sortCols: Seq[String] = Nil,
       writeExtras: String => Unit = _ => ()): Unit = {
     val fs = fsOf(encoded.sparkSession, dir)
-    val visible = new Path(s"$dir/$AppendsDataSubdir/$id")
-    if (fs.exists(visible)) return
-    val stagingName = s".b-$id-${java.util.UUID.randomUUID.toString}"
-    val staging = s"$dir/$AppendsDataSubdir/$stagingName"
-    sorted(encoded.repartition(col(partitionCol)), sortCols)
-      .write.partitionBy(partitionCol).parquet(staging)
-    // EMPTY-BATCH GUARD at the one shared write path (r17 review, both
-    // passes): a zero-row batch writes no partition dirs, and landing
-    // the data-less directory bricks every later union read
-    // (UNABLE_TO_INFER_SCHEMA) — including compaction's fold, so the
-    // index could not even self-heal. Checking the STAGED result costs
-    // one FS listing and no extra plan evaluation (an upstream
-    // isEmpty() would re-run the batch plan); the batch simply never
-    // lands, and idempotent callers still write their replay marker.
-    val hasData = fs.listStatus(new Path(staging))
-      .exists(_.getPath.getName.startsWith(s"$partitionCol="))
-    if (!hasData) { fs.delete(new Path(staging), true); return }
-    writeExtras(staging)
-    Generations.commitRename(fs, new Path(staging), visible,
-      s"landBatch: could not commit $staging and $visible is absent")
+    Generations.stagedCommit(fs, new Path(s"$dir/$AppendsDataSubdir/$id"), s"b-$id") { staging =>
+      sorted(encoded.repartition(col(partitionCol)), sortCols)
+        .write.partitionBy(partitionCol).parquet(staging.toString)
+      // EMPTY-BATCH GUARD at the one shared write path (r17 review, both
+      // passes): a zero-row batch writes no partition dirs, and landing
+      // the data-less directory bricks every later union read
+      // (UNABLE_TO_INFER_SCHEMA) — including compaction's fold, so the
+      // index could not even self-heal. Checking the STAGED result costs
+      // one FS listing and no extra plan evaluation (an upstream
+      // isEmpty() would re-run the batch plan); the batch simply never
+      // lands, and idempotent callers still write their replay marker.
+      val hasData = fs.listStatus(staging).exists(_.getPath.getName.startsWith(s"$partitionCol="))
+      if (hasData) writeExtras(staging.toString) else fs.delete(staging, true)
+      hasData
+    }
   }
 
   private def sorted(df: DataFrame, sortCols: Seq[String]): DataFrame =
@@ -138,26 +125,18 @@ private[graft] object IndexLayout {
     fs.create(new Path(s"$dir/$AppendsSubdir/$id"), true).close()
   }
 
-  /** Fold every visible append batch into the next base generation.
-    * The full protocol, shared verbatim with the IVF lifecycle:
-    *
-    *  - entry GC (aged staging sweep, orphan generations, flat residue
-    *    once a generation is current, already-folded batch data a
-    *    crashed post-flip GC left, plus the r13-era `.old` heal);
-    *  - fold snapshot: batches committing after the listing stay
-    *    visible extras under the new generation — that is the fence
-    *    (`afterSnapshot` is the test seam in that window);
-    *  - `foldSidecars(liveRoot, foldedBatchDirs, nextRoot)` carries
-    *    index-specific sidecar state into the new generation while the
-    *    old root stays fully readable (copy models, sum totals — the
-    *    hook must WRITE into `nextRoot`, never touch the live root);
-    *  - folded ⇒ marker, ALWAYS, and BEFORE markComplete: a batch that
-    *    crashed between its visibility rename and its marker write is
-    *    legitimately foldable, but once its data dir is GC'd a
-    *    marker-less fold would let a stream replay re-append the rows.
-    *    Ad-hoc (`adhoc-<uuid>`) batches have no replay semantics and
-    *    get no marker;
-    *  - post-flip GC of the previous base and the folded batch data.
+  /** Fold every visible append batch into the next base generation:
+    * [[Generations.fold]] with the partition-aligned (and `sortCols`
+    * sorted) writer, the index's flat gen-0 names (partition dirs and
+    * `sidecarNames`), and a pre-complete hook that runs
+    * `foldSidecars(liveRoot, foldedBatchDirs, nextRoot)` (it must WRITE
+    * into `nextRoot`, never touch the live root) and then marks every
+    * folded batch. Folded ⇒ marker, ALWAYS, and BEFORE `_complete`: a
+    * batch that crashed between its visibility rename and its marker
+    * write is legitimately foldable, but once its data dir is GC'd a
+    * marker-less fold would let a stream replay re-append the rows.
+    * Ad-hoc (`adhoc-<uuid>`) batches have no replay semantics and get
+    * no marker.
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -166,78 +145,17 @@ private[graft] object IndexLayout {
       afterSnapshot: () => Unit,
       sortCols: Seq[String] = Nil): Unit = {
     val fs = fsOf(spark, dir)
-    // migration heal for the r13-era in-place-swap protocol: a crash
-    // between ITS two renames left the only copy at `dir + ".old"` with
-    // the live dir missing — restore it before anything else
-    val legacyOld = new Path(dir + ".old")
-    if (!fs.exists(new Path(dir)) && fs.exists(legacyOld)) {
-      require(fs.rename(legacyOld, new Path(dir)),
-        s"compact: could not restore $dir from a legacy .old crash state")
-    } else if (fs.exists(legacyOld)) fs.delete(legacyOld, true)
-    Generations.sweepStaging(fs, dir, AppendsDataSubdir)
-    val cur = Generations.currentGen(fs, dir)
-    Generations.allGens(fs, dir).filterNot(cur.contains)
-      .foreach(n => fs.delete(new Path(Generations.genDir(dir, n)), true))
-    if (cur.isDefined) deleteFlatResidue(fs, dir, partitionCol, sidecarNames)
-    val root = Generations.resolveRoot(fs, dir)
-    // batch data already folded into the current base is dead weight a
-    // crashed post-flip GC may have left. Walk the (small) VISIBLE set
-    // against the manifest, never the manifest against the filesystem.
-    val foldedNow = Generations.foldedIds(fs, root)
-    Generations.visibleBatches(fs, dir, AppendsDataSubdir).filter(foldedNow)
-      .foreach(id => fs.delete(new Path(s"$dir/$AppendsDataSubdir/$id"), true))
-    val toFold = Generations.visibleBatches(fs, dir, AppendsDataSubdir)
-      .filterNot(foldedNow)
-    afterSnapshot()
-    val next = cur.getOrElse(0) + 1
-    val nextRoot = Generations.genDir(dir, next)
-    sorted(
-      toFold
-        .foldLeft(spark.read.parquet(root)) { (df, b) =>
-          df.unionByName(spark.read.parquet(s"$dir/$AppendsDataSubdir/$b"))
-        }
-        .repartition(col(partitionCol)),
-      sortCols)
-      .write.partitionBy(partitionCol).mode("overwrite").parquet(nextRoot)
-    foldSidecars(root, toFold.map(b => s"$dir/$AppendsDataSubdir/$b"), nextRoot)
-    // ad-hoc ids are never replay-checked: once their folded data dir
-    // is GC'd they are provably dead and pruned, so ad-hoc ingest does
-    // not grow the manifest beyond one fold cycle
-    val carried = (foldedNow ++ toFold).filter(id =>
-      !id.startsWith("adhoc-") ||
-        fs.exists(new Path(s"$dir/$AppendsDataSubdir/$id")))
-    Generations.writeFolded(fs, nextRoot, carried)
-    fs.mkdirs(new Path(s"$dir/$AppendsSubdir"))
-    toFold.filterNot(_.startsWith("adhoc-")).foreach { id =>
-      val marker = new Path(s"$dir/$AppendsSubdir/$id")
-      if (!fs.exists(marker)) fs.create(marker, true).close()
-    }
-    Generations.markComplete(fs, nextRoot)
-    Generations.flip(fs, dir, next)
-    if (cur.isDefined) fs.delete(new Path(root), true)
-    else deleteFlatResidue(fs, dir, partitionCol, sidecarNames)
-    toFold.foreach(id => fs.delete(new Path(s"$dir/$AppendsDataSubdir/$id"), true))
-  }
-
-  /** Delete the flat (generation-0) base layout's data and sidecar
-    * files at the top of `dir`, leaving the protocol state (`_current`,
-    * `_gen-*`, `_appends`, `_appends_data`) untouched. Called only once
-    * a generation directory is current, i.e. the flat layout is no
-    * longer resolvable.
-    */
-  private def deleteFlatResidue(
-      fs: FileSystem, dir: String, partitionCol: String,
-      sidecarNames: Seq[String]): Unit = {
-    val keep = Set(AppendsSubdir, AppendsDataSubdir, Generations.Pointer)
-    if (fs.exists(new Path(dir)))
-      fs.listStatus(new Path(dir)).toSeq
-        .filterNot(st => st.getPath.getName.startsWith("_gen-"))
-        .filterNot(st => keep(st.getPath.getName))
-        .filter(st =>
-          st.getPath.getName.startsWith(s"$partitionCol=") ||
-            st.getPath.getName.endsWith(".parquet") ||
-            st.getPath.getName == "_SUCCESS" ||
-            sidecarNames.contains(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, true))
+    Generations.fold(spark, dir, AppendsDataSubdir,
+      write = (rows, nextRoot) =>
+        sorted(rows.repartition(col(partitionCol)), sortCols)
+          .write.partitionBy(partitionCol).mode("overwrite").parquet(nextRoot),
+      afterSnapshot = afterSnapshot,
+      flatData = name => name.startsWith(s"$partitionCol=") || sidecarNames.contains(name),
+      beforeComplete = (root, folded, nextRoot) => {
+        foldSidecars(root, folded.map(b => s"$dir/$AppendsDataSubdir/$b"), nextRoot)
+        fs.mkdirs(new Path(s"$dir/$AppendsSubdir"))
+        folded.filterNot(id => id.startsWith("adhoc-") || batchMarked(fs, dir, id))
+          .foreach(markBatch(fs, dir, _))
+      })
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.GraftQuery
 import graft.operators.{Events, RelationalCore}
+import graft.sources.{Generations, IndexLayout}
 
 import scala.collection.mutable.ListBuffer
 
@@ -958,7 +959,7 @@ object Streams {
     * Layout: each micro-batch lands as one atomically-visible batch
     * directory under a rotation subdir,
     * `dir/rot=<batchId div batchesPerDir>/batch=<ns><batchId>/`,
-    * committed by the [[graft.sources.Generations.commitRename]]
+    * committed by the [[graft.sources.Generations.stagedCommit]]
     * staging protocol (dot-staged write, ONE rename; visibility IS the
     * commit, no marker files and no manifest). Exactly-once is
     * structural: a replayed batch finds its visible dir and no-ops.
@@ -1001,17 +1002,15 @@ object Streams {
   /** One idempotent rotated-batch commit (the foreachBatch body of
     * [[rotatingFileSink]], package-visible for the recovery spec). */
   private[graft] def writeRotatedBatch(
-      batch: DataFrame, dir: String, batchId: Long, batchesPerDir: Int, ns: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val visible = new Path(s"$dir/rot=${batchId / batchesPerDir}/batch=$ns$batchId")
-    if (fs.exists(visible)) return // replay after a crash: visibility IS the commit
-    val staging = new Path(
-      s"${visible.getParent}/.batch-$ns$batchId-${java.util.UUID.randomUUID.toString}")
-    batch.write.parquet(staging.toString)
-    graft.sources.Generations.commitRename(fs, staging, visible,
-      s"rotatingFileSink: could not commit $staging and $visible is absent")
-  }
+      batch: DataFrame, dir: String, batchId: Long, batchesPerDir: Int, ns: String): Unit =
+    // a visible dir on replay after a crash: visibility IS the commit
+    Generations.stagedCommit(
+      IndexLayout.fsOf(batch.sparkSession, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/rot=${batchId / batchesPerDir}/batch=$ns$batchId"),
+      s"batch-$ns$batchId") { staging =>
+      batch.write.parquet(staging.toString)
+      true
+    }
 
   /** Drop every COLD rotation subdir with `rot < before` — the
     * retention lever an indefinite sink eventually needs (the builtin
@@ -1023,9 +1022,8 @@ object Streams {
     * missing partitions (plain parquet partition discovery does).
     */
   def retireRotations(spark: org.apache.spark.sql.SparkSession, dir: String, before: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = IndexLayout.fsOf(spark, dir)
     if (!fs.exists(root)) return
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
@@ -1041,13 +1039,12 @@ object Streams {
     * maintenance entry that calls [[retireRotations]].
     */
   def sweepRotatingStaging(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = IndexLayout.fsOf(spark, dir)
     if (!fs.exists(root)) return
     fs.listStatus(root).foreach { st =>
       if (st.isDirectory && st.getPath.getName.startsWith("rot="))
-        graft.sources.Generations.sweepStaging(fs, dir, st.getPath.getName)
+        Generations.sweepStaging(fs, dir, st.getPath.getName)
     }
   }
 

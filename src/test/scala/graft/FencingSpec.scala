@@ -345,26 +345,58 @@ class FencingSpec extends AnyFunSuite {
       "the final fold restores the pristine layout")
   }
 
-  test("Clustered: crash states — partial generation invisible, mid-flip fallback, heal") {
-    val dir = "/tmp/graft-test/fence_clustered_crash"
-    val base = spark.range(0, 5000).select(
-      (col("id") * 40503L % 9973).as("user_id"), col("id").as("payload"))
-    sources.Clustered.save(base, dir, "user_id", files = 4)
-    val want = sources.Clustered.read(spark, dir).agg(sum("payload")).collect()(0).getLong(0)
-    // partial generation (no _complete) must be invisible
-    assert(new java.io.File(s"$dir/_gen-1").mkdirs())
-    assert(sources.Clustered.read(spark, dir)
-      .agg(sum("payload")).collect()(0).getLong(0) == want)
-    sources.Clustered.optimize(spark, dir, "user_id", files = 4)
-    assert(sources.Clustered.read(spark, dir)
-      .agg(sum("payload")).collect()(0).getLong(0) == want)
-    // mid-flip: pointer gone, complete generation present — fallback resolves
-    require(hfs(dir).delete(new org.apache.hadoop.fs.Path(s"$dir/_current"), false))
-    assert(sources.Clustered.read(spark, dir)
-      .agg(sum("payload")).collect()(0).getLong(0) == want,
-      "highest complete generation must serve when the pointer is mid-flip")
-    sources.Clustered.optimize(spark, dir, "user_id", files = 4)
-    assert(sources.Clustered.read(spark, dir)
-      .agg(sum("payload")).collect()(0).getLong(0) == want, "healed")
+  /** A compacting layout for the crash-state table: how to write its
+    * base, how to fold it, and a fingerprint of its live rows read back
+    * through the layout's OWN reader.
+    */
+  private case class CrashLayout(
+      name: String, write: String => Unit, fold: String => Unit, read: String => Seq[Any])
+
+  private val crashLayouts = Seq(
+    CrashLayout("Clustered",
+      write = dir => sources.Clustered.save(
+        spark.range(0, 5000).select((col("id") * 40503L % 9973).as("user_id"), col("id").as("payload")),
+        dir, "user_id", files = 4),
+      fold = dir => sources.Clustered.optimize(spark, dir, "user_id", files = 4),
+      read = dir => sources.Clustered.read(spark, dir)
+        .agg(count(lit(1)), sum("payload")).collect()(0).toSeq),
+    CrashLayout("SparseIndex",
+      write = dir => operators.SparseIndex.writeIndex(
+        spark.range(0, 300).select(col("id").as("doc_id"),
+          graft.gfunctions.ws_tokens(
+            concat_ws(" ", lit("w"), (col("id") % 17).cast("string"), (col("id") % 5).cast("string")))
+            .as("toks")),
+        dir),
+      fold = dir => operators.SparseIndex.compactIndex(spark, dir),
+      read = dir =>
+        operators.SparseIndex.readPostings(spark, dir)
+          .agg(count(lit(1)), sum("doc_id")).collect()(0).toSeq ++
+          operators.SparseIndex.readTotals(spark, dir).collect()(0).toSeq),
+  )
+
+  crashLayouts.foreach { layout =>
+    test(s"${layout.name}: crash states — partial generation invisible, mid-flip fallback, heal") {
+      val dir = s"/tmp/graft-test/fence_crash_${layout.name}"
+      val fs = hfs(dir)
+      layout.write(dir)
+      val want = layout.read(dir)
+      // partial generation (no _complete) must be invisible
+      assert(new java.io.File(s"$dir/_gen-1").mkdirs())
+      assert(layout.read(dir) == want, "an incomplete generation must not resolve")
+      layout.fold(dir)
+      assert(layout.read(dir) == want)
+      // mid-flip: pointer gone, complete generation present — fallback resolves
+      require(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_current"), false))
+      assert(layout.read(dir) == want,
+        "highest complete generation must serve when the pointer is mid-flip")
+      layout.fold(dir)
+      assert(layout.read(dir) == want, "healed")
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_current")), "the fold re-flips the pointer")
+      // the r13 in-place swap's crash window: dir staged aside, swap never ran
+      require(fs.rename(new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(dir + ".old")))
+      layout.fold(dir)
+      assert(layout.read(dir) == want, "a legacy .old crash state must be restored")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".old")))
+    }
   }
 }
