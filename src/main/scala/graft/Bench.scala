@@ -42,7 +42,10 @@ package graft
   *    across reruns — cross-round comparisons should read
   *    `shuffle_write`/`shuffle_write_prod` FIRST and wall medians
   *    second. Measured in one dedicated warm pass per query/mode (one
-  *    sample suffices: deterministic), before the timed passes.
+  *    sample suffices: deterministic), before the timed passes;
+  *  - `errors` maps each key that threw, in any pass, to the class of its
+  *    first exception (`{}` when none did): a query that throws is still
+  *    timed, so without it a failure reads as a fast query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -59,9 +62,20 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
     }
 
+    // the exception class of every key that threw, the first throw per
+    // key: its timings stay in the line, but a failed query no longer
+    // passes for a fast one
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def guarded[A](q: graft.GraftQuery, failed: A)(body: => A): A =
+      try body catch {
+        case e: Throwable =>
+          errors.getOrElseUpdate(q.name, e.getClass.getName)
+          failed
+      }
+
     def timed(q: graft.GraftQuery, prod: Boolean): Double = {
       val t0 = System.nanoTime()
-      try run(q, prod) catch { case _: Throwable => () }
+      guarded(q, ())(run(q, prod))
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -69,12 +83,12 @@ object Bench {
     // (job-group scoped, listener bus drained): bit-stable columns
     def bytesOf(q: graft.GraftQuery, prod: Boolean): ShuffleAttribution.Bytes =
       ShuffleAttribution.measure(spark, s"bench-${q.name}") {
-        try run(q, prod) catch { case _: Throwable => () }
+        guarded(q, ())(run(q, prod))
       }
-    def rowsOf(q: graft.GraftQuery): Long =
-      try q.run(spark, sfDir).count() catch { case _: Throwable => -1L }
+    def rowsOf(q: graft.GraftQuery): Long = guarded(q, -1L)(q.run(spark, sfDir).count())
     def objL(results: Seq[(String, Long)]) =
       results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def errorsObj = errors.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
 
     def medianMin(samples: Seq[Double]): (Double, Double) = {
       val s = samples.sorted
@@ -96,21 +110,19 @@ object Bench {
     }
 
     if (prodOnly) {
-      SparkEntry.registry.foreach { q =>
-        try run(q, prod = true) catch { case _: Throwable => () }
-      }
+      SparkEntry.registry.foreach(q => guarded(q, ())(run(q, prod = true)))
       val bytesProd = SparkEntry.registry.map(q => q.name -> bytesOf(q, prod = true))
       val results = SparkEntry.registry.map { q =>
         q.name -> medianMin(Seq(timed(q, true), timed(q, true), timed(q, true)))
       }
       val total = results.map(_._2._1).sum
-      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)(_._1)},"queries_min":${obj(results)(_._2)},"total_min":${results.map(_._2._2).sum},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"mode":"prod","sf":"$sfDir"}""")
+      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)(_._1)},"queries_min":${obj(results)(_._2)},"total_min":${results.map(_._2._2).sum},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"errors":$errorsObj,"mode":"prod","sf":"$sfDir"}""")
     } else {
       // warm both modes, then alternate oracle/prod samples per query;
       // within-pair order swaps per iteration so carryover averages out
       SparkEntry.registry.foreach { q =>
-        try run(q, prod = false) catch { case _: Throwable => () }
-        try run(q, prod = true) catch { case _: Throwable => () }
+        guarded(q, ())(run(q, prod = false))
+        guarded(q, ())(run(q, prod = true))
       }
       // the bit-stable columns first: per-query shuffle bytes (one warm
       // dedicated pass per mode) and oracle output rows
@@ -131,7 +143,7 @@ object Bench {
       val prod = both.map { case (n, _, p) => n -> p }
       val total = oracle.map(_._2._1).sum
       val totalProd = prod.map(_._2._1).sum
-      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(oracle)(_._1)},"queries_min":${obj(oracle)(_._2)},"total_min":${oracle.map(_._2._2).sum},"queries_prod":${obj(prod)(_._1)},"total_prod":$totalProd,"shuffle_write":${objL(bytesOracle.map(b => b._1 -> b._2.write))},"shuffle_read":${objL(bytesOracle.map(b => b._1 -> b._2.read))},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"rows":${objL(rowCounts)},"sf":"$sfDir"}""")
+      emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(oracle)(_._1)},"queries_min":${obj(oracle)(_._2)},"total_min":${oracle.map(_._2._2).sum},"queries_prod":${obj(prod)(_._1)},"total_prod":$totalProd,"shuffle_write":${objL(bytesOracle.map(b => b._1 -> b._2.write))},"shuffle_read":${objL(bytesOracle.map(b => b._1 -> b._2.read))},"shuffle_write_prod":${objL(bytesProd.map(b => b._1 -> b._2.write))},"shuffle_read_prod":${objL(bytesProd.map(b => b._1 -> b._2.read))},"rows":${objL(rowCounts)},"errors":$errorsObj,"sf":"$sfDir"}""")
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -10,8 +11,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   *  - `time <sfDir> <name>...` — the Bench methodology for a few keys:
   *    warm pass per mode, three interleaved samples, median per mode,
-  *    plus the per-mode shuffle-write bytes. Iterating on one
-  *    operator re-measures in seconds instead of the full bench.
+  *    plus the per-mode shuffle-write bytes and the codegen classes
+  *    compiled during the timed samples (a warm key reads 0; more means
+  *    its plan recompiles on every run). Iterating on one operator
+  *    re-measures in seconds instead of the full bench.
   *    Session size SPARK_GRAFT_CPUS (default 32).
   *  - `bytes <sfDir> <name>...` — prod shuffle-write bytes per key,
   *    printed as ByteBudgetSpec calibration rows. Shares the spec's
@@ -79,12 +82,16 @@ object Dev {
         ShuffleAttribution.measure(spark, label)(run(spark, sfDir, q, prod)).write
       val bo = written(s"fb-o-$name", prod = false)
       val bp = written(s"fb-p-$name", prod = true)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val compiles0 = compiles.getCount
       val samples = (1 to 3).map { i =>
         if (i % 2 == 1) { val o = timed(false); val p = timed(true); (o, p) }
         else { val p = timed(true); val o = timed(false); (o, p) }
       }
+      val compiled = compiles.getCount - compiles0
       println(f"[focused] $name%-28s oracle ${median(samples.map(_._1))}%7.2f s  " +
-        f"prod ${median(samples.map(_._2))}%7.2f s  shW_o $bo%12d  shW_p $bp%12d")
+        f"prod ${median(samples.map(_._2))}%7.2f s  shW_o $bo%12d  shW_p $bp%12d  " +
+        f"compiles $compiled%4d")
     }
 
   private def bytes(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =

@@ -8,16 +8,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.functions.call_function
 
-import graft.functions.{BloomAgg, BloomContains, HeavyHitters, CosineSim, HashedProjection, HyperplaneBands, Int8Codes, Int8Cosine, JaccardSim, KgramMd5Hashes, MatVecF, MinhashMd5Sig, MinhashSig, NearestCentroid, PqAdcSim, PqAsymSim, PqCodes, PqLut, PqResidCodes, PqResidLut, PqResidSim, ShingleHashes, ShingleMd5Hashes, ShingleXor64, SimHash64, SimHashMd5, TopKByScore, WsTokens, ZValue2}
+import graft.functions.{BloomAgg, BloomContains, HeavyHitters, CosineSim, HashedProjection, HyperplaneBands, InHashSet, Int8Codes, Int8Cosine, JaccardSim, KgramMd5Hashes, MatVecF, MinhashMd5Sig, MinhashSig, NearestCentroid, PqAdcSim, PqAsymSim, PqCodes, PqLut, PqResidCodes, PqResidLut, PqResidSim, ShingleHashes, ShingleMd5Hashes, ShingleXor64, SimHash64, SimHashMd5, TopKByScore, WsTokens, ZValue2}
 
 /** Engine extension point, installed via spark.sql.extensions (GraftSession
   * sets it). Registers every native expression of
-  * [[GraftExtensions.kernels]] as a SQL function, so both
+  * [[GraftExtensions.kernels]], and [[GraftExtensions.inSet]], as a SQL
+  * function, so both
   * `spark.sql("SELECT cosine_sim(a,b)")` and the typed Column helpers work.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.kernels.foreach { k =>
+    (GraftExtensions.kernels :+ GraftExtensions.inSet).foreach { k =>
       ext.injectFunction(
         (FunctionIdentifier(k.name), new ExpressionInfo(k.cls.getName, k.name), k.guarded _))
     }
@@ -170,10 +171,26 @@ object GraftExtensions {
       Seq(col("vec"), int("planes"), int("bands"), int("dims")),
       a => HyperplaneBands(a(0), a.int(1), a.int(2), a.int(3))),
   )
+
+  /** `in_set(value, values)`: set membership with no value in the
+    * generated code ([[InHashSet.of]]). Registered beside the kernels, not
+    * among them: for a bigint value it builds Catalyst's own `InSet`, so
+    * its expression class depends on the value's type.
+    */
+  private[graft] val inSet: Kernel =
+    Kernel("in_set", classOf[InHashSet], Seq(col("value"), longs("values")),
+      a => InHashSet.of(a(0), a.longs(1)))
 }
 
 /** Typed Column-API surface for the engine's native functions. */
 object gfunctions {
+  /** `value IN (values)` for an int or bigint column, compiled once for
+    * any values: they stay out of the generated code, so a serve that
+    * prunes by different ids reuses the classes of the last one.
+    */
+  def in_set(value: Column, values: Seq[Long]): Column =
+    call_function("in_set", value, org.apache.spark.sql.functions.typedLit(values.toArray))
+
   /** cosine similarity of two array<float> columns (native codegen'd kernel). */
   def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 

@@ -49,8 +49,31 @@ object Tables {
 /** Session factory with the engine's scale-oriented defaults. Local tests use
   * local[*]; on a cluster the same confs apply (AQE re-plans shuffle counts,
   * skew joins, and converts sort-merge to broadcast at runtime).
+  *
+  * Two confs make a repeated composed pipeline compile its whole-stage
+  * code once per JVM instead of once per call; each does nothing without
+  * the other:
+  *  - `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheEntries]]).
+  *    Spark's default cache holds 100 generated classes, and one
+  *    `TrainPipeline.manifest` needs ~272 distinct ones (a hybrid serve
+  *    ~97), so each call evicted what the next one needed. The conf is
+  *    STATIC: `CodeGenerator` reads it once, when it first builds its
+  *    cache, so it takes effect only if it is set before the first
+  *    session of the JVM generates code. Every engine entry point (specs,
+  *    `Bench`, `Verify`, `Dev`, perfbench) builds its session here.
+  *  - `spark.sql.codegen.useIdInClassName=false`. By default the class
+  *    name carries the stage id (`GeneratedIteratorForCodegenStage<N>`),
+  *    and AQE numbers stages in a different order on each run, so a
+  *    stage whose code is otherwise identical misses the cache. Plans do
+  *    not change: `explain` still shows the `*(n)` stage markers.
   */
 object GraftSession {
+  /** Codegen cache size: the largest composed pipeline's distinct classes
+    * (a manifest, ~272) with room for a serve and the ad-hoc queries
+    * around it in the same JVM.
+    */
+  val CodegenCacheEntries = 1000
+
   /** Engine session for any master. On a cluster pass the real master and
     * size shufflePartitions ~ cores*2.5; locally both mains derive them from
     * SPARK_GRAFT_CPUS so bench/verify measure the SAME tuned engine users
@@ -79,6 +102,8 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
     val b = if (rocksDbStateStore)
       b0.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     else b0

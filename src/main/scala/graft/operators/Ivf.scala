@@ -516,7 +516,8 @@ object Ivf {
     val centroids = readCentroids(spark, dir)
     val probed = probes(queries, centroids, nprobe, codec).localCheckpoint(eager = true)
     val clusters = probed.select("cluster").distinct().collect().map(_.getInt(0))
-    val pruned = readIndex(spark, dir).filter(col("cluster").isin(clusters.toIndexedSeq: _*))
+    val pruned = readIndex(spark, dir)
+      .filter(graft.gfunctions.in_set(col("cluster"), clusters.toSeq.map(_.toLong)))
     rank(predicate.fold(pruned)(pruned.filter), probed, k, codec, centroids)
   }
 

@@ -269,10 +269,10 @@ object SparseIndex {
 
   private def prunedPostingsOfUnits(
       spark: SparkSession, units: Seq[String], hs: Array[Long]): DataFrame = {
-    val bkts = hs.map(h => (h % NBuckets).toInt).distinct.toSeq
+    val bkts = hs.map(h => h % NBuckets).distinct.toSeq
     postingsOfUnits(spark, units)
-      .filter(col("bkt").isin(bkts: _*))
-      .filter(col("h").isin(hs.toSeq: _*))
+      .filter(graft.gfunctions.in_set(col("bkt"), bkts))
+      .filter(graft.gfunctions.in_set(col("h"), hs.toSeq))
   }
 
   /** The budget phase of a serve, isolated as the spec seam: the
