@@ -63,65 +63,17 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-  /** MinHash signature (k hash functions over 3-shingles): the native
-    * codegen'd [[graft.functions.MinhashSig]] kernel — one tight pass per
-    * row, k seeded XXH64 hashes per shingle from a reusable byte buffer,
-    * zero shuffle, NULL when the doc has no shingles (filtered before
-    * banding, so empty docs never bucket together). Replaces the
-    * declarative aggregate/transform/zip_with fold, which is
-    * CodegenFallback and paid interpreted lambda frames plus a boxed
-    * long per hash (ScaleProbe8, 102k docs: 3.27 s -> 0.24 s, 13.6x).
+  /** Candidate pairs (id_a < id_b) sharing at least one xxhash minhash
+    * band of `sigged` ([[Lsh.minhashSigned]] rows): the capped band
+    * self-join, [[Lsh.selfPairs]], which shuffles ids only and drops
+    * degenerate mega-buckets (boilerplate clusters) before the join —
+    * those are exact-dup territory ([[exact]]), not a C(n,2) pair
+    * explosion.
     */
-  private def minhashSig(k: Int): Column =
-    graft.gfunctions.minhash_sig(col("toks"), k)
-
-  private[graft] def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand))))
-
-  /** (doc_id, sig, band_key) signature+band rows — the reference-corpus
-    * side of stream-vs-corpus matching ([[graft.streaming.Streams
-    * .nearDupStream]]); same signature family and band keys as
-    * [[minhashCandidatesT]].
-    */
-  private[graft] def bandedSignatures(
-      toked: DataFrame, k: Int = 16, bands: Int = 4): DataFrame = {
-    val r = k / bands
-    toked.select(col("doc_id"), minhashSig(k).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("sig"),
-        explode(bandKeys(col("sig"), bands, r)).as("band_key"))
-  }
-
-  /** Candidate pairs (id_a < id_b) sharing at least one minhash band.
-    * Same slim-pair shape as the embedding path: the band self-join
-    * shuffles ids only; signatures re-attach afterwards for estimation.
-    * [[Lsh.capBuckets]] drops degenerate mega-buckets (boilerplate
-    * clusters) before the self-join — those are exact-dup territory
-    * (Dedup.exact), not a C(n,2) pair explosion.
-    */
-  private[graft] def minhashCandidates(
-      docs: DataFrame, k: Int, bands: Int, bucketCap: Int): DataFrame =
-    minhashCandidatesT(tokenized(docs), k, bands, bucketCap)
-
-  private[graft] def minhashCandidatesT(
-      toked: DataFrame, k: Int, bands: Int, bucketCap: Int): DataFrame = {
-    val r = k / bands
-    val sigged = toked.select(
-      col("doc_id"), minhashSig(k).as("sig"))
-      .filter(col("sig").isNotNull)
-    val banded = Lsh.capBuckets(
-      sigged.select(col("doc_id"), explode(bandKeys(col("sig"), bands, r)).as("band_key")),
-      Seq("band_key"), bucketCap)
-    val pairs = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_key") === col("b.band_key") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(sigged.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigged.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-  }
+  private[graft] def minhashPairs(
+      sigged: DataFrame, k: Int, bands: Int, bucketCap: Int): DataFrame =
+    Lsh.selfPairs(
+      Lsh.minhashBanded(sigged, k, bands, "doc_id"), "doc_id", Seq("band_key"), bucketCap)
 
   /** Per-doc minhash-LSH decision: is_dup iff a smaller-id candidate with
     * estimated Jaccard >= tau exists (estimate = matching signature
@@ -136,63 +88,28 @@ object Dedup {
   def minhashDecisionsT(
       toked: DataFrame, k: Int = 16, bands: Int = 4, tau: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
-    val cand = minhashCandidatesT(toked, k, bands, bucketCap)
-    val est = aggregate(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
-    val dups = cand
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= tau)
-      .groupBy(col("id_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_dup_partners"))
-    toked.select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"))
+    val sigged = Lsh.minhashSigned(toked, col("toks"), k, "doc_id")
+    sigDecisions(toked, sigged, minhashPairs(sigged, k, bands, bucketCap), k, tau)
   }
 
-  // ---------------------------------------------- md5 minhash (oracle-green)
+  /** The minhash families' shared tail: pairs verified on full
+    * signatures, then one (doc_id, is_dup, n_dup_partners) row per doc.
+    */
+  private def sigDecisions(
+      toked: DataFrame, sigged: DataFrame, pairs: DataFrame, k: Int, tau: Double): DataFrame =
+    Lsh.decide(toked.select("doc_id"), "doc_id", Lsh.verifySigs(pairs, sigged, sigged, k, tau),
+      "id_b", "is_dup", "n_dup_partners")
 
-  /** MinHash-LSH decisions with an md5-derived hash family — the same
-    * pipeline as [[minhashDecisions]], but every step is expressible in
-    * portable SQL (DuckDB md5 + hex cast), so this variant runs under the
-    * driver's hash-compare oracle gate instead of rows-only.
-    *
-    * Hash family: ONE md5 per shingle, split into h1 (hex[0:15], 60 bits)
-    * and h2 (hex[15:23], 32 bits), then h_j = h1 + j*h2 — Kirsch &
-    * Mitzenmacher double hashing ("Less Hashing, Same Performance"),
-    * which preserves minhash behavior while doing k=16 hashes for the
-    * price of one digest (with the signature stage table below, the
-    * naive per-j variant's 33.8 s at sf0.1 drops to 13.6 s; the residual
-    * over the xxhash variant's ~3 s is the portable md5+conv fold — the
-    * price of oracle parity; [[minhashDecisions]] stays the fast path).
-    * Sums stay < 2^61, so no bigint overflow in either engine's ANSI
-    * arithmetic. Band keys are the r per-band min-hashes joined as a
-    * decimal string in j order (exactly what string_agg(h, ',' ORDER BY
-    * j) yields in SQL). Same 100 TB shape as the xxhash variant: per-row
-    * zero-shuffle signature fold (shingles + digest bound once), slim
-    * (band, id) self-join, [[Lsh.capBuckets]] guard — and the cap is
-    * modeled in BOTH engines, so Spark and the oracle agree at any
-    * scale, not just under the cap.
-    */
-  /** (pairs, sigged): md5-minhash LSH candidate pairs (id_a < id_b) and the
-    * materialized signature stage table they were banded from — shared by
-    * [[minhashMd5Decisions]] and [[jaccardMd5Decisions]].
-    */
-  private def minhashMd5Candidates(
-      docs: DataFrame, k: Int, bands: Int, bucketCap: Int): (DataFrame, DataFrame) =
-    minhashMd5CandidatesT(tokenized(docs), k, bands, bucketCap)
+  // ---------------------------------------------- md5 minhash (oracle-green)
 
   /** (sigged, banded): md5-minhash signature stage table (localCheckpoint
     * — the plan reuses it for banding AND verify sides; without
     * materialization each use re-runs the per-shingle digest fold,
     * measured 3x the whole query's cost at sf0.1) plus its UNCAPPED
     * (doc_id, band_idx, band_val) band rows. Shared by the self-join
-    * candidate path below and the asymmetric stream-vs-corpus twin
-    * ([[graft.streaming.Streams.nearDupBatchMd5]]), which caps only the
-    * corpus side like the streaming match.
+    * candidate path ([[minhashMd5Pairs]]) and the asymmetric
+    * stream-vs-corpus twin ([[nearDupPairsAgainstT]]), which caps only
+    * the reference side like the streaming match.
     */
   private[graft] def md5SigBanded(
       toked: DataFrame, k: Int, bands: Int): (DataFrame, DataFrame) = {
@@ -205,32 +122,44 @@ object Dedup {
     val sigged = toked.select(col("doc_id"), sig.as("sig"))
       .filter(col("sig").isNotNull)
       .localCheckpoint()
-    val banded = sigged.select(
-      col("doc_id"),
-      explode(array((0 until bands).map { b =>
-        struct(
-          lit(b).as("band_idx"),
-          concat_ws(",", transform(slice(col("sig"), b * r + 1, r), h => h.cast("string")))
-            .as("band_val"))
-      }: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_idx"), col("band.band_val"))
+    val banded = Lsh.bandRows(sigged, Seq("doc_id"), (0 until bands).map { b =>
+      concat_ws(",", transform(slice(col("sig"), b * r + 1, r), h => h.cast("string")))
+    })
     (sigged, banded)
   }
 
-  private def minhashMd5CandidatesT(
+  /** (pairs, sigged): md5-minhash LSH candidate pairs (id_a < id_b) and the
+    * materialized signature stage table they were banded from — shared by
+    * [[minhashMd5DecisionsT]] and [[jaccardMd5Decisions]].
+    */
+  private def minhashMd5Pairs(
       toked: DataFrame, k: Int, bands: Int, bucketCap: Int): (DataFrame, DataFrame) = {
-    val (sigged, banded0) = md5SigBanded(toked, k, bands)
-    val banded = Lsh.capBuckets(banded0, Seq("band_idx", "band_val"), bucketCap)
-    val pairs = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    (pairs, sigged)
+    val (sigged, banded) = md5SigBanded(toked, k, bands)
+    (Lsh.selfPairs(banded, "doc_id", Seq("band_idx", "band_val"), bucketCap), sigged)
   }
 
+  /** MinHash-LSH decisions with an md5-derived hash family — the same
+    * pipeline as [[minhashDecisions]], but every step is expressible in
+    * portable SQL (DuckDB md5 + hex cast), so this variant runs under the
+    * driver's hash-compare oracle gate instead of rows-only.
+    *
+    * Hash family: ONE md5 per shingle, split into h1 (hex[0:15], 60 bits)
+    * and h2 (hex[15:23], 32 bits), then h_j = h1 + j*h2 — Kirsch &
+    * Mitzenmacher double hashing ("Less Hashing, Same Performance"),
+    * which preserves minhash behavior while doing k=16 hashes for the
+    * price of one digest (with [[md5SigBanded]]'s signature stage table, the
+    * naive per-j variant's 33.8 s at sf0.1 drops to 13.6 s; the residual
+    * over the xxhash variant's ~3 s is the portable md5+conv fold — the
+    * price of oracle parity; [[minhashDecisions]] stays the fast path).
+    * Sums stay < 2^61, so no bigint overflow in either engine's ANSI
+    * arithmetic. Band keys are the r per-band min-hashes joined as a
+    * decimal string in j order (exactly what string_agg(h, ',' ORDER BY
+    * j) yields in SQL). Same 100 TB shape as the xxhash variant: per-row
+    * zero-shuffle signature fold (shingles + digest bound once), slim
+    * (band, id) self-join, [[Lsh.capBuckets]] guard — and the cap is
+    * modeled in BOTH engines, so Spark and the oracle agree at any
+    * scale, not just under the cap.
+    */
   def minhashMd5Decisions(
       docs: DataFrame, k: Int = 16, bands: Int = 4, tau: Double = 0.5,
       bucketCap: Int = 10000): DataFrame =
@@ -240,23 +169,8 @@ object Dedup {
   def minhashMd5DecisionsT(
       toked: DataFrame, k: Int = 16, bands: Int = 4, tau: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
-    val (pairs, sigged) = minhashMd5CandidatesT(toked, k, bands, bucketCap)
-    val est = aggregate(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
-    val dups = pairs
-      .join(sigged.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigged.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= tau)
-      .groupBy(col("id_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_dup_partners"))
-    toked.select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"))
+    val (pairs, sigged) = minhashMd5Pairs(toked, k, bands, bucketCap)
+    sigDecisions(toked, sigged, pairs, k, tau)
   }
 
   // ------------------------------------------------------ n-gram jaccard
@@ -279,22 +193,28 @@ object Dedup {
     val sets = toked.select(
       col("doc_id"),
       graft.gfunctions.shingle_hashes(col("toks")).as("sh"))
-    val cand = minhashCandidatesT(toked, k, bands, bucketCap).select("id_a", "id_b")
-    val jac = graft.gfunctions.jaccard_sim(col("sa.sh"), col("sb.sh"))
-    val dups = cand
+    val sigged = Lsh.minhashSigned(toked, col("toks"), k, "doc_id")
+    jaccardVerified(docs, sets, minhashPairs(sigged, k, bands, bucketCap), tau)
+  }
+
+  /** The jaccard families' shared tail: exact Jaccard of the two sides'
+    * sorted shingle-hash sets (`sets(doc_id, sh)`, the native merge-count
+    * [[graft.functions.JaccardSim]]) over the candidate pairs, then one
+    * decision row per doc with its best verified Jaccard.
+    */
+  private def jaccardVerified(
+      docs: DataFrame, sets: DataFrame, pairs: DataFrame, tau: Double): DataFrame = {
+    // Joined on the aliased set table rather than through Lsh.attach's
+    // renaming projection: the md5 sets are a checkpointed stage table,
+    // and a rename adds a Project over each side of dedup_jaccard_md5's
+    // plan.
+    val verified = pairs
       .join(sets.alias("sa"), col("id_a") === col("sa.doc_id"))
       .join(sets.alias("sb"), col("id_b") === col("sb.doc_id"))
-      .withColumn("jaccard", jac)
+      .withColumn("jaccard", graft.gfunctions.jaccard_sim(col("sa.sh"), col("sb.sh")))
       .filter(col("jaccard") >= tau)
-      .groupBy(col("id_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_dup_partners"), max(col("jaccard")).as("best_jaccard"))
-    docs.select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"),
-        coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
+    Lsh.decide(docs.select("doc_id"), "doc_id", verified, "id_b", "is_dup", "n_dup_partners",
+      Some("jaccard" -> "best_jaccard"))
   }
 
   /** Exact Jaccard verify over the md5-minhash candidates — every stage
@@ -309,33 +229,20 @@ object Dedup {
       bucketCap: Int = 10000): DataFrame = {
     val toked = tokenized(docs)
     // Materialized like the signature stage table: `sets` feeds BOTH sides
-    // of the verify join (sa/sb below), and each alias re-executes its plan
-    // — without the checkpoint the per-shingle md5 digest pass runs twice
-    // (exchange reuse may or may not dedupe it; the stage table makes the
-    // single digest pass explicit and plan-independent). Sets are the
-    // native sorted-distinct md5-h1 kernel; jaccard is the linear-merge
-    // kernel — same integer counts, same one double division, so the
-    // emitted doubles still hash-match the unchanged oracle.
+    // of the verify join (sa/sb in [[jaccardVerified]]), and each alias
+    // re-executes its plan — without the checkpoint the per-shingle md5
+    // digest pass runs twice (exchange reuse may or may not dedupe it; the
+    // stage table makes the single digest pass explicit and
+    // plan-independent). Sets are the native sorted-distinct md5-h1
+    // kernel; jaccard is the linear-merge kernel — same integer counts,
+    // same one double division, so the emitted doubles still hash-match
+    // the unchanged oracle.
     val sets = toked.select(
       col("doc_id"),
       graft.gfunctions.shingle_md5_hashes(col("toks")).as("sh"))
       .localCheckpoint()
-    val (cand, _) = minhashMd5CandidatesT(toked, k, bands, bucketCap)
-    val jac = graft.gfunctions.jaccard_sim(col("sa.sh"), col("sb.sh"))
-    val dups = cand
-      .join(sets.alias("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sets.alias("sb"), col("id_b") === col("sb.doc_id"))
-      .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= tau)
-      .groupBy(col("id_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_dup_partners"), max(col("jaccard")).as("best_jaccard"))
-    docs.select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"),
-        coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
+    val (pairs, _) = minhashMd5Pairs(toked, k, bands, bucketCap)
+    jaccardVerified(docs, sets, pairs, tau)
   }
 
   // ------------------------------------ asymmetric near-dup (one side
@@ -373,16 +280,9 @@ object Dedup {
       bands: Int = 4,
       tau: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
-    val matches = nearDupPairsAgainstT(arrivals, reference, k, bands, tau, bucketCap)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_matches"), max(col("est_jaccard")).as("best_est"))
-    arrivals.select("doc_id")
-      .join(matches, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_matches").isNotNull.as("is_match"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        coalesce(col("best_est"), lit(0.0)).as("best_est"))
+    Lsh.decide(arrivals.select("doc_id"), "doc_id",
+      nearDupPairsAgainstT(arrivals, reference, k, bands, tau, bucketCap), "doc_id",
+      "is_match", "n_matches", Some("est_jaccard" -> "best_est"))
   }
 
   /** The PAIR level of [[nearDupAgainstT]] — (doc_id, ref_id,
@@ -407,23 +307,10 @@ object Dedup {
       .join(ref, Seq("band_idx", "band_val"))
       .select(col("doc_id"), col("ref_id"))
       .dropDuplicates("doc_id", "ref_id")
-    val est = aggregate(
-      zip_with(col("sig"), col("ref_sig"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
-    cand
-      .join(aSig, Seq("doc_id"))
-      .join(rSig.select(col("doc_id").as("ref_id"), col("sig").as("ref_sig")), Seq("ref_id"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= tau)
+    Lsh.verifySigs(cand, aSig, rSig, k, tau, ("doc_id", "ref_id"), ("sig", "ref_sig"))
       .select(col("doc_id"), col("ref_id"), col("est_jaccard"))
   }
 
-  /** The SQL rendering of [[nearDupAgainst]] over the `documents`
-    * table, parameterized by the two role predicates and the output
-    * column names — ONE generator renders both the stream_neardup and
-    * the q88_neardup_decontam oracles, so the asymmetric law cannot
-    * fork between its gates.
-    */
   /** The md5-minhash signature + band CTE chain over a source CTE
     * exposing (doc_id, toks), every CTE name prefixed with `p` — the
     * ONE SQL rendering of the signature law, composable into any oracle
@@ -500,6 +387,12 @@ object Dedup {
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches, MAX(est_jaccard) AS best_est
         FROM ${p}est WHERE est_jaccard >= 0.5 GROUP BY doc_id)"""
 
+  /** The SQL rendering of [[nearDupAgainst]] over the `documents`
+    * table, parameterized by the two role predicates and the output
+    * column names — ONE generator renders both the stream_neardup and
+    * the q88_neardup_decontam oracles, so the asymmetric law cannot
+    * fork between its gates.
+    */
   private[graft] def nearDupAgainstSql(
       arrPred: String, refPred: String,
       matchCol: String, nCol: String): String =
@@ -536,7 +429,7 @@ object Dedup {
     * candidates; verification = popcount(xor) <= maxHamming. A pair within
     * hamming radius must agree on at least one band (pigeonhole: 3 flipped
     * bits cannot touch all 4 bands). [[Lsh.capBuckets]] drops degenerate
-    * mega-buckets before the self-join (see minhashCandidates).
+    * mega-buckets before the self-join (see [[minhashPairs]]).
     */
   def simhashDecisions(
       docs: DataFrame, maxHamming: Int = 3, bucketCap: Int = 10000): DataFrame =
@@ -550,33 +443,14 @@ object Dedup {
   private[graft] def simhashBandDecisions(
       sh: DataFrame, bitsPerBand: Int, maxHamming: Int, bucketCap: Int): DataFrame = {
     val mask = (1L << bitsPerBand) - 1
-    val banded = Lsh.capBuckets(
-      sh.select(
-        col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band_idx"),
-            shiftright(col("simhash"), bitsPerBand * b).bitwiseAND(lit(mask)).as("band_val"))
-        }: _*)).as("band"))
-        .select(col("doc_id"), col("simhash"), col("band.band_idx"), col("band.band_val")),
-      Seq("band_idx", "band_val"), bucketCap)
-    val dups = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+    val banded = Lsh.bandRows(sh, Seq("doc_id", "simhash"), (0 until 4).map { b =>
+      shiftright(col("simhash"), bitsPerBand * b).bitwiseAND(lit(mask))
+    })
+    val verified = Lsh.selfPairs(banded, "doc_id", Seq("band_idx", "band_val"), bucketCap,
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .dropDuplicates("id_a", "id_b")
       .filter(col("hamming") <= maxHamming)
-      .groupBy(col("id_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_dup_partners"), min(col("hamming")).as("min_hamming"))
-    sh.select("doc_id", "simhash")
-      .join(dups, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"), col("simhash"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"))
+    Lsh.decide(sh.select("doc_id", "simhash"), "doc_id", verified, "id_b",
+      "is_dup", "n_dup_partners")
   }
 
   /** 60-bit SimHash from md5-derived token hashes — value-portable to
@@ -618,7 +492,7 @@ object Dedup {
     * on the same 8-byte key, so AQE's skew split handles boilerplate
     * mega-windows. The windows frame feeds both the index build and the
     * join-back side — materialized once (stage-table discipline, see
-    * [[minhashMd5CandidatesT]]) so the digest pass runs once, not per
+    * [[md5SigBanded]]) so the digest pass runs once, not per
     * branch.
     *
     * Reference anchor: the reference re-crawls catalog pages whole
@@ -694,51 +568,6 @@ object Dedup {
   /** Bloom hash count for the affected-doc prefilter (q44's kernel). */
   private[graft] val LineRepairBloomHashes = 6
 
-  /** LINE-LEVEL DEDUP WITH REMOVAL (r17 judge item) — the C4/RefinedWeb
-    * corpus-REPAIR step between boilerplate strip (q78) and doc-level
-    * dedup: a line occurring in more than `maxDocs` distinct documents
-    * is boilerplate by frequency and is REMOVED from every document,
-    * emitting cleaned text. Unlike [[passageProfileT]] (which FLAGS
-    * docs on sliding window overlap), this TRANSFORMS them. (Raffel et
-    * al. 2020 §2.3 drop repeated three-sentence spans; Penedo et al.
-    * 2023, RefinedWeb, remove duplicated lines outright.)
-    *
-    * Law (one rendering, Scala + SQL): lines = split(text, '\n'); line
-    * identity = the 60-bit md5 of the exact line bytes (BOTH engines
-    * hash, so a collision cannot fork them); df = count(DISTINCT
-    * doc_id) per line hash; non-empty lines with df > maxDocs are
-    * removed; empty lines are document structure and always kept;
-    * clean_text = the kept lines rejoined by '\n' in original order.
-    *
-    * Scale shape: document TEXT never crosses an exchange. The df count
-    * ships (doc_id, pos, h) triples; the removal set is a slim hash
-    * column; the join-back aggregates only the REMOVED positions per
-    * doc (inner join — docs with nothing to remove contribute zero
-    * rows), and the rewrite is a per-row higher-order filter on the
-    * original doc row against the position map. The map's join
-    * strategy is dispatched on its MEASURED size (rows AND total
-    * positions — not an optimizer estimate: ScaleProbe35 caught AQE
-    * mis-sizing the collect_set aggregate and sort-merge-joining,
-    * which shuffles the TEXT, 130% of corpus bytes at 1M docs):
-    *  - within [[LineRepairBroadcastMaxDocs]] /
-    *    [[LineRepairBroadcastMaxPositions]] the map BROADCASTS — the
-    *    common case, and text never moves;
-    *  - past either bound, the q44 bloom-prefilter shape: a bloom of
-    *    affected doc_ids (~1–2 B/doc, broadcastable at ANY realistic
-    *    repair population) splits the corpus map-side — untouched docs
-    *    pass through without a shuffle, and only affected docs' text
-    *    (plus the engineered FP residue, which the left join passes
-    *    through unchanged) enters the shuffle join. Text movement is
-    *    bounded by the affected population in BOTH branches; neither
-    *    can die on a broadcast cap.
-    *
-    * Operating cost (ScaleProbe35, 1M docs × 22 lines): the df-count
-    * exchange is the whole shuffle at ~24 B per line OCCURRENCE
-    * (doc_id + 60-bit line hash in an UnsafeRow) — a fixed per-line
-    * price independent of line length, so the byte cut vs shuffling
-    * text scales with real line sizes (3–8× at 80–200-byte web-text
-    * lines; repair throughput ~44k docs/s on the probe box).
-    */
   /** (doc_id, ls) split form of a text corpus — the rewrite input. */
   private def linesOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), "\n").as("ls"))
@@ -796,6 +625,51 @@ object Dedup {
     rewritten(lined, removedPos)
   }
 
+  /** LINE-LEVEL DEDUP WITH REMOVAL (r17 judge item) — the C4/RefinedWeb
+    * corpus-REPAIR step between boilerplate strip (q78) and doc-level
+    * dedup: a line occurring in more than `maxDocs` distinct documents
+    * is boilerplate by frequency and is REMOVED from every document,
+    * emitting cleaned text. Unlike [[passageProfileT]] (which FLAGS
+    * docs on sliding window overlap), this TRANSFORMS them. (Raffel et
+    * al. 2020 §2.3 drop repeated three-sentence spans; Penedo et al.
+    * 2023, RefinedWeb, remove duplicated lines outright.)
+    *
+    * Law (one rendering, Scala + SQL): lines = split(text, '\n'); line
+    * identity = the 60-bit md5 of the exact line bytes (BOTH engines
+    * hash, so a collision cannot fork them); df = count(DISTINCT
+    * doc_id) per line hash; non-empty lines with df > maxDocs are
+    * removed; empty lines are document structure and always kept;
+    * clean_text = the kept lines rejoined by '\n' in original order.
+    *
+    * Scale shape: document TEXT never crosses an exchange. The df count
+    * ships (doc_id, pos, h) triples; the removal set is a slim hash
+    * column; the join-back aggregates only the REMOVED positions per
+    * doc (inner join — docs with nothing to remove contribute zero
+    * rows), and the rewrite is a per-row higher-order filter on the
+    * original doc row against the position map. The map's join
+    * strategy is dispatched on its MEASURED size (rows AND total
+    * positions — not an optimizer estimate: ScaleProbe35 caught AQE
+    * mis-sizing the collect_set aggregate and sort-merge-joining,
+    * which shuffles the TEXT, 130% of corpus bytes at 1M docs):
+    *  - within [[LineRepairBroadcastMaxDocs]] /
+    *    [[LineRepairBroadcastMaxPositions]] the map BROADCASTS — the
+    *    common case, and text never moves;
+    *  - past either bound, the q44 bloom-prefilter shape: a bloom of
+    *    affected doc_ids (~1–2 B/doc, broadcastable at ANY realistic
+    *    repair population) splits the corpus map-side — untouched docs
+    *    pass through without a shuffle, and only affected docs' text
+    *    (plus the engineered FP residue, which the left join passes
+    *    through unchanged) enters the shuffle join. Text movement is
+    *    bounded by the affected population in BOTH branches; neither
+    *    can die on a broadcast cap.
+    *
+    * Operating cost (ScaleProbe35, 1M docs × 22 lines): the df-count
+    * exchange is the whole shuffle at ~24 B per line OCCURRENCE
+    * (doc_id + 60-bit line hash in an UnsafeRow) — a fixed per-line
+    * price independent of line length, so the byte cut vs shuffling
+    * text scales with real line sizes (3–8× at 80–200-byte web-text
+    * lines; repair throughput ~44k docs/s on the probe box).
+    */
   def lineDedup(
       docs: DataFrame,
       maxDocs: Int = LineDupMaxDocs,
@@ -877,33 +751,21 @@ object Dedup {
     // the difference between a ~300 MB and a ~10 GB pair exchange
     // (measured 280 s -> 35 s). Vectors re-attach for verification via
     // joins against the (broadcast-able) embedding table.
-    val banded = Lsh.capBuckets(
+    val pairs = Lsh.selfPairs(
       Lsh.banded(emb.select("vec_id", "embedding"), "embedding", planes, bands, dims)
         .select("band_idx", "band_val", "vec_id"),
-      Seq("band_idx", "band_val"), bucketCap)
-    val pairs = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val dups = pairs
-      .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("ea")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("eb")), Seq("id_b"))
-      .withColumn("sim", cosine_sim(col("ea"), col("eb")))
-      .filter(col("sim") >= tau)
-      .groupBy(col("id_b").as("vec_id"))
-      .agg(count(lit(1)).as("n_dup_partners"), max(col("sim")).as("best_sim"))
-    emb.select("vec_id")
-      .join(dups, Seq("vec_id"), "left")
-      .select(
-        col("vec_id"),
-        col("n_dup_partners").isNotNull.as("is_dup"),
-        coalesce(col("n_dup_partners"), lit(0L)).as("n_dup_partners"),
-        coalesce(col("best_sim"), lit(0.0)).as("best_sim"))
+      "vec_id", Seq("band_idx", "band_val"), bucketCap)
+    Lsh.decide(emb.select("vec_id"), "vec_id", cosineVerified(pairs, emb).filter(col("sim") >= tau),
+      "id_b", "is_dup", "n_dup_partners", Some("sim" -> "best_sim"))
   }
+
+  /** Candidate vector pairs with their exact float cosine `sim`: the two
+    * sides' embeddings re-attached from `emb(vec_id, embedding)`, scored
+    * by the native codegen'd cosine_sim kernel.
+    */
+  private def cosineVerified(pairs: DataFrame, emb: DataFrame): DataFrame =
+    Lsh.attach(pairs, emb, emb, "vec_id", "embedding", ("ea", "eb"))
+      .withColumn("sim", cosine_sim(col("ea"), col("eb")))
 
   /** Oracle probe for the embedding-dedup VERIFY stage. The splitmix
     * hyperplane CANDIDATE stage is rows-only by design (not
@@ -974,15 +836,7 @@ object Dedup {
       .select(col("cell"), lit(true).as("cell_capped"))
       .localCheckpoint()
     val cells = pinned.join(broadcast(oversized), Seq("cell"), "left_anti")
-    val pairs = cells.alias("a")
-      .join(cells.alias("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val dups = pairs
-      .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("ea")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("eb")), Seq("id_b"))
-      .withColumn("sim", cosine_sim(col("ea"), col("eb")))
+    val dups = cosineVerified(Lsh.keyPairs(cells, "vec_id", Seq("cell")), emb)
       // best_sim aggregates over ALL lower-id cell-mates, not just the
       // ones past tau: the column is the decision's full evidence (the
       // paper's epsilon can be re-applied downstream without recompute),
@@ -1664,19 +1518,6 @@ object Dedup {
       Multimodal.binarizeWithImageDups(Tables.documents(s, d)))),
   )
 
-  /** The image-phash LAW under the HARD gate (the q76
-    * synthesize-then-operate pattern): gray rasters are generated from
-    * COLUMNS — cell (x,y) of doc_id is an md5-derived integer keyed on
-    * the doc's GROUP id (doc_id DIV 3), plus a doc-specific bump at one
-    * cell (x=3,y=5) of (doc_id%3)*40 — so triples of consecutive docs
-    * are planted near-duplicates differing in at most the 2 gradient
-    * bits that cell touches, and the ENTIRE pipeline (grid → dHash bits
-    * → band rotation → bucket cap → hamming verify → keep-lowest
-    * decisions) is ANSI-expressible and hash-compared against DuckDB.
-    * The decode stage is exactly what this twin swaps out; everything
-    * downstream of the raster is the production code path
-    * ([[simhashBandDecisions]], shared with simhash/image-phash).
-    */
   /** One md5 digest per GROUP feeds every cell by shift-XOR double
     * hashing (r21, the round-4 one-digest minhash move applied here):
     * the old law paid 70 md5+conv evaluations per document (one per
@@ -1701,6 +1542,19 @@ object Dedup {
     if (x == 3 && y == 5) base + (docId % 3).cast("int") * lit(40) else base
   }
 
+  /** The image-phash LAW under the HARD gate (the q76
+    * synthesize-then-operate pattern): gray rasters are generated from
+    * COLUMNS — cell (x,y) of doc_id is an md5-derived integer keyed on
+    * the doc's GROUP id (doc_id DIV 3), plus a doc-specific bump at one
+    * cell (x=3,y=5) of (doc_id%3)*40 — so triples of consecutive docs
+    * are planted near-duplicates differing in at most the 2 gradient
+    * bits that cell touches, and the ENTIRE pipeline (grid → dHash bits
+    * → band rotation → bucket cap → hamming verify → keep-lowest
+    * decisions) is ANSI-expressible and hash-compared against DuckDB.
+    * The decode stage is exactly what this twin swaps out; everything
+    * downstream of the raster is the production code path
+    * ([[simhashBandDecisions]], shared with simhash/image-phash).
+    */
   def imagePhashMd5(
       s: org.apache.spark.sql.SparkSession, d: String,
       maxHamming: Int = 3, bucketCap: Int = 10000): DataFrame = {

@@ -153,17 +153,13 @@ object Similarity {
     * move) and the full LSH pipeline goes under the DuckDB gate.
     */
   private def signGridBanded(
-      vecs: DataFrame, vecCol: String, planes: Int, bands: Int): DataFrame = {
-    val bandStructs = (0 until bands).map { b =>
-      val v = (0 until planes)
+      vecs: DataFrame, vecCol: String, planes: Int, bands: Int): DataFrame =
+    Lsh.bandRows(vecs, vecs.columns.toSeq, (0 until bands).map { b =>
+      (0 until planes)
         .map(j => when(col(vecCol).getItem(b * planes + j) > lit(0f), lit(1 << j))
           .otherwise(lit(0)))
         .reduce(_ + _)
-      struct(lit(b).as("band_idx"), v.as("band_val"))
-    }
-    vecs.select(col("*"), explode(array(bandStructs: _*)).as("band"))
-      .select((vecs.columns.map(col) :+ col("band.band_idx") :+ col("band.band_val")): _*)
-  }
+    })
 
   /** LSH top-k with sign-grid bands — [[lshTopK]]'s exact shape
     * (band-bucket candidates via a broadcast equi-join, exact cosine

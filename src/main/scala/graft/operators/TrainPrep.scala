@@ -1178,7 +1178,7 @@ object TrainPrep {
     // to the physical execution). With exchange reuse off or AQE plan
     // drift the branches could see DIFFERENT pid assignments and join
     // wrong offsets — so the slim (doc_id, n_tokens, pid) frame is
-    // pinned once, same stage-table discipline as minhashMd5CandidatesT
+    // pinned once, same stage-table discipline as Dedup.md5SigBanded
     // (on a cluster: a persisted stage table).
     val perDoc = packTokensStageOf(perDocIn).localCheckpoint()
     val wLocal = Window.partitionBy("pid").orderBy("doc_id")

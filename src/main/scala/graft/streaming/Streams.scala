@@ -268,30 +268,41 @@ object Streams {
       bands: Int = 4,
       tau: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
-    import graft.operators.{Dedup, Lsh}
-    // Capped like every batch LSH path: a degenerate mega-bucket in the
-    // reference corpus (boilerplate family) would otherwise fan each
-    // arriving doc out across the whole bucket in the stream-static join.
-    val ref = Lsh.capBuckets(
-      Dedup.bandedSignatures(Dedup.tokenized(corpus), k, bands), Seq("band_key"), bucketCap)
-      .select(col("doc_id").as("ref_id"), col("sig").as("ref_sig"), col("band_key"))
-    val r = k / bands
-    val sigged = docs
-      .select(col("doc_id"), col("ts"),
-        graft.gfunctions.minhash_sig(graft.gfunctions.ws_tokens(col("text")), k).as("sig"))
-      .filter(col("sig").isNotNull)
+    val signed = graft.operators.Lsh.minhashSigned(
+      docs, graft.gfunctions.ws_tokens(col("text")), k, "doc_id", "ts")
       .withWatermark("ts", "1 hour")
-    val est = aggregate(
-      zip_with(col("sig"), col("ref_sig"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
-    sigged
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(Dedup.bandKeys(col("sig"), bands, r)).as("band_key"))
-      .join(ref, Seq("band_key"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= tau)
+    verifiedAgainstRef(signed, nearDupRef(corpus, k, bands, bucketCap), k, bands, tau, "doc_id", "ts")
       .dropDuplicatesWithinWatermark("doc_id", "ref_id")
       .select("doc_id", "ref_id", "est_jaccard")
+  }
+
+  /** The (ref_id, ref_sig, band_key) reference signature table of the
+    * minhash stream lanes: banded xxhash minhash signatures of the
+    * corpus, capped like every batch LSH path — a degenerate mega-bucket
+    * in the reference corpus (boilerplate family) would otherwise fan
+    * each arriving doc out across the whole bucket in the band join.
+    */
+  private def nearDupRef(corpus: DataFrame, k: Int, bands: Int, bucketCap: Int): DataFrame = {
+    import graft.operators.{Dedup, Lsh}
+    val sigged = Lsh.minhashSigned(Dedup.tokenized(corpus), col("toks"), k, "doc_id")
+    Lsh.capBuckets(Lsh.minhashBanded(sigged, k, bands, "doc_id", "sig"), Seq("band_key"), bucketCap)
+      .select(col("doc_id").as("ref_id"), col("sig").as("ref_sig"), col("band_key"))
+  }
+
+  /** Signed arrivals (`keep` columns + `sig`) banded, band-joined to a
+    * [[nearDupRef]] table and verified on full signatures: the rows whose
+    * `est_jaccard` is at least `tau`, one per shared band (pair dedup is
+    * the caller's: watermark state in a stream, a plain distinct in a
+    * batch).
+    */
+  private def verifiedAgainstRef(
+      signed: DataFrame, ref: DataFrame, k: Int, bands: Int, tau: Double,
+      keep: String*): DataFrame = {
+    import graft.operators.Lsh
+    Lsh.minhashBanded(signed, k, bands, keep :+ "sig": _*)
+      .join(ref, Seq("band_key"))
+      .withColumn("est_jaccard", Lsh.agreement(col("sig"), col("ref_sig"), k))
+      .filter(col("est_jaccard") >= tau)
   }
 
   /** Build (or REBUILD) the reference signature table [[nearDupStreamRefreshing]]
@@ -316,13 +327,8 @@ object Streams {
       dir: String,
       k: Int = 16,
       bands: Int = 4,
-      bucketCap: Int = 10000): Unit = {
-    import graft.operators.{Dedup, Lsh}
-    Lsh.capBuckets(
-      Dedup.bandedSignatures(Dedup.tokenized(corpus), k, bands), Seq("band_key"), bucketCap)
-      .select(col("doc_id").as("ref_id"), col("sig").as("ref_sig"), col("band_key"))
-      .write.mode("overwrite").parquet(dir)
-  }
+      bucketCap: Int = 10000): Unit =
+    nearDupRef(corpus, k, bands, bucketCap).write.mode("overwrite").parquet(dir)
 
   /** One batch of docs against a prebuilt (ref_id, ref_sig, band_key)
     * signature table: minhash per row, band-join, estimate, threshold.
@@ -334,24 +340,13 @@ object Streams {
       ref: DataFrame,
       k: Int,
       bands: Int,
-      tau: Double): DataFrame = {
-    import graft.operators.Dedup
-    val r = k / bands
-    val est = aggregate(
-      zip_with(col("sig"), col("ref_sig"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
-    docBatch
-      .select(col("doc_id"),
-        graft.gfunctions.minhash_sig(graft.gfunctions.ws_tokens(col("text")), k).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("sig"),
-        explode(Dedup.bandKeys(col("sig"), bands, r)).as("band_key"))
-      .join(ref, Seq("band_key"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= tau)
+      tau: Double): DataFrame =
+    verifiedAgainstRef(
+      graft.operators.Lsh.minhashSigned(
+        docBatch, graft.gfunctions.ws_tokens(col("text")), k, "doc_id"),
+      ref, k, bands, tau, "doc_id")
       .dropDuplicates("doc_id", "ref_id")
       .select("doc_id", "ref_id", "est_jaccard")
-  }
 
   /** REFRESHABLE stream-vs-corpus near-dup matching: the reference
     * signature table is RE-READ from `refSigDir` inside `foreachBatch`
@@ -552,22 +547,14 @@ object Streams {
       planes: Int = 32,
       bands: Int = 4,
       dims: Int = 64,
-      bucketCap: Int = 10000): DataFrame = {
-    val matches = embNearDupMatch(
-      arrivals,
-      embNearDupBands(corpus, planes, bands, dims, bucketCap),
-      embNearDupVecs(corpus),
-      tau, planes, bands, dims)
-      .groupBy("vec_id")
-      .agg(count(lit(1)).as("n_matches"), max(col("sim")).as("best_sim"))
-    arrivals.select("vec_id")
-      .join(matches, Seq("vec_id"), "left")
-      .select(
-        col("vec_id"),
-        col("n_matches").isNotNull.as("is_match"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        coalesce(col("best_sim"), lit(0.0)).as("best_sim"))
-  }
+      bucketCap: Int = 10000): DataFrame =
+    graft.operators.Lsh.decide(arrivals.select("vec_id"), "vec_id",
+      embNearDupMatch(
+        arrivals,
+        embNearDupBands(corpus, planes, bands, dims, bucketCap),
+        embNearDupVecs(corpus),
+        tau, planes, bands, dims),
+      "vec_id", "is_match", "n_matches", Some("sim" -> "best_sim"))
 
   /** Build (or REBUILD) the reference tables [[embNearDupStreamRefreshing]]
     * reads: `dir/bands` — the slim capped band table (band_idx,
@@ -625,29 +612,6 @@ object Streams {
         tau, planes, bands, dims)
     }
 
-  /** STREAMING INDEX INGEST — the live leg of the persisted-ANN-index
-    * lifecycle (build [[graft.operators.Ivf.writeIndex]] → append →
-    * compact → serve): arriving vectors append to the on-disk inverted
-    * lists per micro-batch, assigned at full precision against the
-    * index's own persisted quantizer, landing cluster-aligned in their
-    * partitions. The next [[graft.operators.Ivf.searchIndex]] listing
-    * serves them with zero coordination — a freshly ingested corpus is
-    * searchable at micro-batch latency without rebuilds.
-    *
-    * Exactly-once is the sink's job here, and it is structural, not a
-    * convention: [[graft.operators.Ivf.appendIndexBatch]] stages each
-    * batch dot-prefixed and commits it with ONE atomic rename into
-    * `_appends_data/<batchId>`, then lands a `_appends/<batchId>`
-    * marker — a foreachBatch replay after a crash short-circuits on
-    * the marker, or on the already-visible batch dir, never duplicates
-    * a vector (marker survival across
-    * [[graft.operators.Ivf.compactIndex]] is spec-pinned). Because the
-    * batch never touches the base generation, the ingest stream may run
-    * CONCURRENTLY with compaction — the generation-pointer protocol
-    * guarantees a racing batch stays live instead of being folded away
-    * (FencingSpec). Fragmentation from many small batches is the
-    * documented compaction trigger.
-    */
   /** Batch-id namespace for the ingest lanes, derived from the
     * checkpoint path: Spark numbers batches PER CHECKPOINT, so a
     * stream re-pointed at an existing table/index with a FRESH
@@ -853,6 +817,29 @@ object Streams {
     }
   }
 
+  /** STREAMING INDEX INGEST — the live leg of the persisted-ANN-index
+    * lifecycle (build [[graft.operators.Ivf.writeIndex]] → append →
+    * compact → serve): arriving vectors append to the on-disk inverted
+    * lists per micro-batch, assigned at full precision against the
+    * index's own persisted quantizer, landing cluster-aligned in their
+    * partitions. The next [[graft.operators.Ivf.searchIndex]] listing
+    * serves them with zero coordination — a freshly ingested corpus is
+    * searchable at micro-batch latency without rebuilds.
+    *
+    * Exactly-once is the sink's job here, and it is structural, not a
+    * convention: [[graft.operators.Ivf.appendIndexBatch]] stages each
+    * batch dot-prefixed and commits it with ONE atomic rename into
+    * `_appends_data/<batchId>`, then lands a `_appends/<batchId>`
+    * marker — a foreachBatch replay after a crash short-circuits on
+    * the marker, or on the already-visible batch dir, never duplicates
+    * a vector (marker survival across
+    * [[graft.operators.Ivf.compactIndex]] is spec-pinned). Because the
+    * batch never touches the base generation, the ingest stream may run
+    * CONCURRENTLY with compaction — the generation-pointer protocol
+    * guarantees a racing batch stays live instead of being folded away
+    * (FencingSpec). Fragmentation from many small batches is the
+    * documented compaction trigger.
+    */
   def indexAppendStream(
       vectors: DataFrame,
       indexDir: String,

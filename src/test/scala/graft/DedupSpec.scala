@@ -268,7 +268,9 @@ class DedupSpec extends AnyFunSuite {
       (4L, text(22)),
     ) ++ (10001L to 15000L).map(id => (id, boiler)))
 
-    val nPairs = Dedup.minhashCandidates(mega, 16, 4, bucketCap = 100).count()
+    val sigged = operators.Lsh.minhashSigned(
+      Dedup.tokenized(mega), org.apache.spark.sql.functions.col("toks"), 16, "doc_id")
+    val nPairs = Dedup.minhashPairs(sigged, 16, 4, bucketCap = 100).count()
     assert(nPairs < 1000, s"minhash pair join exploded: $nPairs pairs")
 
     val mh = Dedup.minhashDecisions(mega, bucketCap = 100).collect()
@@ -286,6 +288,65 @@ class DedupSpec extends AnyFunSuite {
     val jc = Dedup.jaccardDecisions(mega, bucketCap = 100).collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(jc(2L) && jc(3L) && !jc(4L), "jaccard inherits capped candidates")
+  }
+
+  /** Synthetic (id, band_idx, band_val) band rows. */
+  private def bandRowsDf(rows: Seq[(Long, Int, Int)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("id", "band_idx", "band_val")
+  }
+
+  private def pairSet(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  test("band bucket cap at its threshold: a bucket of exactly cap rows pairs, cap + 1 rows none") {
+    // oversizedBuckets is a strict `>`: a bucket AT the cap is still
+    // paired in full, one row past it is dropped whole.
+    val cap = 6
+    val atCap = (1L to cap.toLong).map(id => (id, 0, 7))
+    val pastCap = (101L to 101L + cap).map(id => (id, 0, 8))
+    val got = pairSet(operators.Lsh.selfPairs(
+      bandRowsDf(atCap ++ pastCap), "id", Seq("band_idx", "band_val"), cap))
+    val want = for (a <- 1L to cap.toLong; b <- a + 1 to cap.toLong) yield (a, b)
+    assert(pastCap.size == cap + 1)
+    assert(got == want, s"C($cap,2) = ${want.size} pairs at the cap, none past it; got $got")
+  }
+
+  test("capped band self-join equals a driver-side brute force over a seeded frame") {
+    val rnd = new Random(7)
+    val cap = 8
+    val rows = for (id <- 0L until 80L; b <- 0 until 4) yield (id, b, rnd.nextInt(12))
+    val kept = rows.groupBy(r => (r._2, r._3)).values.filter(_.size <= cap)
+    val want = kept.flatMap { bucket =>
+      for (x <- bucket; y <- bucket if x._1 < y._1) yield (x._1, y._1)
+    }.toSeq.distinct.sorted
+    assert(rows.groupBy(r => (r._2, r._3)).values.exists(_.size > cap), "seed must hit the cap")
+    assert(want.nonEmpty)
+    val got = pairSet(operators.Lsh.selfPairs(
+      bandRowsDf(rows), "id", Seq("band_idx", "band_val"), cap))
+    assert(got == want)
+  }
+
+  test("LSH dedup keys return the same decision multiset over repartitioned, reordered input") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val sf = "/root/testdata/sf0.001"
+    def shuffled(df: DataFrame): DataFrame =
+      df.repartition(7).sortWithinPartitions(xxhash64(df.columns.map(col): _*))
+    def multiset(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val keys: Seq[(String, DataFrame => DataFrame, DataFrame)] = Seq(
+      ("dedup_minhash_lsh", d => Dedup.minhashDecisions(d), docs),
+      ("dedup_ngram_jaccard", d => Dedup.jaccardDecisions(d), docs),
+      ("dedup_simhash", d => Dedup.simhashDecisions(d), docs),
+      ("dedup_embedding_cosine", e => Dedup.embeddingCosineDecisions(e), emb),
+      ("dedup_image_phash",
+        d => Dedup.imagePhashDecisions(operators.Multimodal.binarizeWithImageDups(d)), docs))
+    keys.foreach { case (name, run, input) =>
+      val base = multiset(run(input))
+      assert(base.nonEmpty, s"$name: no decisions")
+      assert(multiset(run(shuffled(input))) == base, s"$name: decisions depend on input order")
+    }
   }
 
   test("connected components: hash-min labels chains and leaves islands apart") {
